@@ -568,11 +568,15 @@ object Queries {
     *
     * Returns (lookup frame of (idx, <keyCol>), n = lookup size).
     */
-  private def boundedLookup(df: DataFrame, keyCol: String,
+  private[graft] def boundedLookup(df: DataFrame, keyCol: String,
       cap: Long, qname: String): (DataFrame, Long) = {
-    if (df.count() > cap)
-      require(df.select(count_distinct(col(keyCol))).head().getLong(0) <= cap,
-        s"$qname lookup side unexpectedly large")
+    // the distinct count here counts a NULL key as one slot, as the built
+    // lookup does, so both guards agree on the cap boundary
+    if (df.count() > cap) {
+      val d = df.select(count_distinct(col(keyCol)) + max(col(keyCol).isNull).cast("long"))
+        .head().getLong(0)
+      require(d <= cap, s"$qname lookup side unexpectedly large: $d distinct keys before the build")
+    }
     // the appended null carries the key column's OWN type (from the schema,
     // not a hand-written string that could drift from the parquet and
     // silently coerce the whole key array)
@@ -623,24 +627,28 @@ object Queries {
   //          distinct, map-side partial) instead of two separate
   //          distinct-shuffled scans; exploding the two tiny sets rebuilds
   //          the identical cross product ----
-  private def q20(s: SparkSession, dir: String): DataFrame =
+  private def q20(s: SparkSession, dir: String): DataFrame = {
     // collect_set DROPS nulls where SELECT DISTINCT keeps one — a null flag
     // per column re-appends the null element so the one-scan shape stays
     // byte-equivalent to the oracle's DISTINCT even on null-bearing data
-    // (max over zero rows is null → otherwise-branch → empty set, matching)
-    t(s, dir, "lineitem")
+    // (max over zero rows is null → otherwise-branch → empty set, matching).
+    // The appended null takes the column's type from the schema, as in
+    // boundedLookup.
+    val lineitem = t(s, dir, "lineitem")
+    def withNull(set: String, flag: String, c: String): Column =
+      when(col(flag), array_append(col(set), lit(null).cast(lineitem.schema(c).dataType)))
+        .otherwise(col(set))
+    lineitem
       .agg(collect_set(col("l_returnflag")).as("__rfs"),
         max(col("l_returnflag").isNull).as("__rfn"),
         collect_set(col("l_linestatus")).as("__lss"),
         max(col("l_linestatus").isNull).as("__lsn"))
-      .select(
-        explode(when(col("__rfn"), array_append(col("__rfs"), lit(null).cast("string")))
-          .otherwise(col("__rfs"))).as("l_returnflag"),
+      .select(explode(withNull("__rfs", "__rfn", "l_returnflag")).as("l_returnflag"),
         col("__lss"), col("__lsn"))
       .select(col("l_returnflag"),
-        explode(when(col("__lsn"), array_append(col("__lss"), lit(null).cast("string")))
-          .otherwise(col("__lss"))).as("l_linestatus"))
+        explode(withNull("__lss", "__lsn", "l_linestatus")).as("l_linestatus"))
       .crossJoin(t(s, dir, "region").select(col("r_name")).distinct())
+  }
 
   private val q20Sql =
     """SELECT l_returnflag, l_linestatus, r_name

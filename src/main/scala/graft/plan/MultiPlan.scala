@@ -440,6 +440,22 @@ object MultiPlanRunner {
     * construction, dropped before the frames are returned/written. */
   private val RowId = "__graft_rid"
 
+  /** Generates every task in FK insert order, writes the sinks in that
+    * order, and validates.
+    *
+    * All validation blocks of one dataset merge, in declaration order, into
+    * one rule list; each block's `errorThreshold` stays on its own rules.
+    * A validated dataset with a sink is counted in the pass that writes it:
+    * [[RuleEngine.countAggs]] is attached to the written frame with
+    * `Dataset.observe`, so the data is not generated a second time and the
+    * FK lookups are not rebuilt. Without a sink, or with an `ignore` sink
+    * (whose write may never run), the counts fall back to one aggregate job
+    * over the frame, the same as [[RuleEngine.validateAll]]
+    * ([[Sinks.ObservedWrite]]). Either way each failed rule takes up to 5
+    * samples in one `limit(n)` job. Validations are resolved before the
+    * first sink is written: an unknown dataset or an expression that fails
+    * to resolve throws with nothing written.
+    */
   def run(spark: SparkSession, plan: MultiPlanSpec): MultiPlanOutcome = {
     // duplicate task names would silently corrupt the run: taskByName is
     // last-wins, insertOrder emits the name once per occurrence — one task
@@ -452,6 +468,13 @@ object MultiPlanRunner {
           "with relationship table.column endpoints)")
     }
     val taskByName = plan.tasks.map(t => t.name -> t).toMap
+    // every validation block of a dataset, merged in declaration order; a
+    // block's errorThreshold travels on its own rules
+    val rulesByDataset: Map[String, Seq[Rule]] = plan.validations.map { v =>
+      if (!taskByName.contains(v.dataset))
+        throw new IllegalArgumentException(s"validation references unknown dataset '${v.dataset}'")
+      v.dataset -> v.rules.map(r => Rule(r.name, expr(r.expr), Some(v.errorThreshold)))
+    }.groupMapReduce(_._1)(_._2)(_ ++ _)
     plan.relationships.foreach { r =>
       require(taskByName.contains(r.childTable) && taskByName.contains(r.parentTable),
         s"relationship ${r.from} -> ${r.to} references an undeclared task " +
@@ -575,17 +598,25 @@ object MultiPlanRunner {
       frames(name) = df.drop(RowId).drop(omitted: _*)
     }
 
-    // sinks, in insert order (FK-safe for a consuming system)
-    order.foreach { name =>
-      taskByName(name).sink.foreach(s => Sinks.write(frames(name), s))
+    // a validated dataset's rules are counted in the pass that writes its
+    // sink; every write is built before the first one runs, so a rule that
+    // fails to resolve throws before anything is written
+    val checked = rulesByDataset.map { case (name, rules) =>
+      name -> (rules,
+        new Sinks.ObservedWrite(frames(name), taskByName(name).sink, RuleEngine.countAggs(rules)))
     }
-
-    val validations = plan.validations.map { v =>
-      val df = frames.getOrElse(v.dataset,
-        throw new IllegalArgumentException(s"validation references unknown dataset '${v.dataset}'"))
-      val rules = v.rules.map(r => Rule(r.name, expr(r.expr)))
-      v.dataset -> RuleEngine.validateAllWithSamples(df, rules, v.errorThreshold)
+    // sinks, in insert order (FK-safe for a consuming system)
+    val results = order.flatMap { name =>
+      checked.get(name) match {
+        case Some((rules, w)) =>
+          Some(name -> RuleEngine.withSamples(frames(name), rules,
+            RuleEngine.foldCounts(w.run(), rules), numSamples = 5))
+        case None =>
+          taskByName(name).sink.foreach(Sinks.write(frames(name), _))
+          None
+      }
     }.toMap
+    val validations = plan.validations.map(_.dataset).distinct.map(d => d -> results(d)).toMap
 
     MultiPlanOutcome(plan.name, order, finalCounts, frames.toMap, validations)
   }

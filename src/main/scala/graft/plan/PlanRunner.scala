@@ -3,7 +3,7 @@ package graft.plan
 import graft.functions.Scrubber
 import graft.pipeline.QualityFilter
 import graft.rules.{Rule, RuleEngine, RuleResult}
-import org.apache.spark.sql.{DataFrame, Observation, SparkSession}
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 /** Executes a [[PlanSpec]]: read → (quality filter) → rules → scrub → sink,
@@ -11,9 +11,10 @@ import org.apache.spark.sql.functions._
   * `PlanProcessor.determineAndExecutePlan` (`core/plan/PlanProcessor.scala:
   * 25-129`) — but the whole row-level stage is ONE declarative Spark plan:
   * annotation, scrubbing and the sink write share a single pass, and
-  * rows-in/rows-out come from `observe()` on that same pass (no second scan).
-  * Only the per-rule validation report (counts + error samples) runs extra
-  * bounded jobs, and only when rules are declared.
+  * rows-in/rows-out come from `observe()` on that same pass (no second scan;
+  * an `ignore` sink counts with one separate job, see
+  * [[Sinks.ObservedWrite]]). Only the per-rule validation report (counts +
+  * error samples) runs extra bounded jobs, and only when rules are declared.
   */
 object PlanRunner {
 
@@ -79,16 +80,15 @@ object PlanRunner {
     val hasKeep = plan.qualityFilter || rules.nonEmpty
 
     // sink write doubles as the counting pass via observe(); the metrics
-    // node sits BELOW the keep-filter so rowsIn counts every source row
+    // sit BELOW the keep-filter so rowsIn counts every source row
     val (rowsIn, rowsOut) = plan.sink match {
       case Some(sink) =>
-        val obs = Observation(s"plan_${plan.name}")
         val kept = if (hasKeep) count_if(col(RuleEngine.KeepCol)) else count(lit(1))
-        val observed = scrubbed.observe(obs, count(lit(1)).as("n"), kept.as("kept"))
-        val toWrite =
-          if (plan.keepOnly && hasKeep) observed.where(col(RuleEngine.KeepCol)) else observed
-        Sinks.write(toWrite, sink)
-        (obs.get("n").asInstanceOf[Long], obs.get("kept").asInstanceOf[Long])
+        val keepOnly: DataFrame => DataFrame =
+          if (plan.keepOnly && hasKeep) _.where(col(RuleEngine.KeepCol)) else identity
+        val row = new Sinks.ObservedWrite(scrubbed, Some(sink), Seq(count(lit(1)), kept), keepOnly)
+          .run()
+        (row.getLong(0), row.getLong(1))
       case None => (-1L, -1L)
     }
 

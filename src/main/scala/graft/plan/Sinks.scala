@@ -1,7 +1,9 @@
 package graft.plan
 
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{Column, DataFrame, Observation, Row}
 import org.apache.spark.sql.functions._
+import scala.concurrent.Await
+import scala.concurrent.duration.Duration
 
 /** Shared batch-sink writer for [[SinkSpec]]s — the reference's sink
   * conveniences (`core/sink/BatchSinkWriter.scala` partitionDf at 259-265
@@ -51,6 +53,39 @@ object Sinks {
         (if (s.format == "csv") Map("inferSchema" -> "true") else Map.empty[String, String]) ++
           (s.options - "partitions" - "singleFile" - "unwrapTopLevelArray"))
       .load(s.path)
+
+  /** A sink write that also evaluates `aggs` over every row of `df`.
+    *
+    * With a sink whose mode is not `ignore`, the aggregates ride on the
+    * write's own pass through `Dataset.observe`: no second pass over `df`.
+    * Otherwise they run as one separate aggregate job over `df`: there is
+    * nothing to write, or an `ignore` write over an existing target may
+    * never run its plan (Spark then completes a directory target's
+    * observation with zero counts, and [[write]] returns early for a
+    * single-file one, so its observation never completes). Every other mode
+    * of [[write]] either runs the plan or throws.
+    *
+    * `prepare` shapes the written frame ABOVE the observation (a
+    * keep-filter, say), so the aggregates still see every row of `df`.
+    * Construction analyzes the aggregates, so an expression that fails to
+    * resolve throws here, before anything is written.
+    */
+  final class ObservedWrite(df: DataFrame, sink: Option[SinkSpec], aggs: Seq[Column],
+      prepare: DataFrame => DataFrame = identity) {
+    require(aggs.nonEmpty, "no aggregates to observe")
+    // analyzed here, before any observation exists; run only as the fallback
+    private val separate = df.agg(aggs.head, aggs.tail: _*)
+    private val inWrite = sink.exists(!_.mode.equalsIgnoreCase("ignore"))
+    private val obs = Observation()
+    private val toWrite =
+      prepare(if (inWrite) df.observe(obs, aggs.head, aggs.tail: _*) else df)
+
+    /** Writes the sink, if any, and returns the aggregate row. Call once. */
+    def run(): Row = {
+      sink.foreach(write(toWrite, _))
+      if (inWrite) Await.result(obs.future, Duration.Inf) else separate.head()
+    }
+  }
 
   def write(df: DataFrame, s0: SinkSpec): Unit = {
     val (df1, s) =

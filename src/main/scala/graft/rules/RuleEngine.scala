@@ -1,6 +1,6 @@
 package graft.rules
 
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.{Column, DataFrame, Row}
 import org.apache.spark.sql.functions._
 
 /** Evaluates a rule set over a DataFrame in a single projection.
@@ -17,6 +17,16 @@ import org.apache.spark.sql.functions._
   * the first-failing-rule name doubles as the drop reason (the reference
   * reports per-rule error counts; we recover those from a groupBy on
   * drop_reason or the observe() metrics, both cheap).
+  *
+  * Per-rule counts come from one aggregate list, [[countAggs]], folded by
+  * [[foldCounts]]. [[validateAll]] runs it as its own job. A plan dataset
+  * that is written to a sink gets it attached to the write with
+  * `Dataset.observe` instead ([[graft.plan.Sinks.ObservedWrite]]), so its
+  * rules are counted in the pass that writes it. That falls back to one
+  * separate aggregate job over the same frame when the dataset has no
+  * sink, or when the sink's mode is `ignore` (such a write may never run
+  * its plan). Failed rules then take their samples with [[withSamples]],
+  * one `limit(n)` job each, on either path.
   */
 object RuleEngine {
 
@@ -46,17 +56,8 @@ object RuleEngine {
     * >= 1 an absolute count — same contract as the reference
     * (`ValidationOperations.scala:44-51`). One job, map-side aggregated.
     */
-  def validate(df: DataFrame, rule: Rule, threshold: Double = 0.0): RuleResult = {
-    val row = df
-      .agg(
-        count(lit(1)).as("total"),
-        count_if(!rule.strict).as("errors"))
-      .head()
-    val total = row.getLong(0)
-    val errors = row.getLong(1)
-    RuleResult(rule.name, total, errors,
-      underThreshold(errors, total, rule.threshold.getOrElse(threshold)))
-  }
+  def validate(df: DataFrame, rule: Rule, threshold: Double = 0.0): RuleResult =
+    validateAll(df, Seq(rule), threshold).head
 
   /** `threshold` < 1 is a fraction of rows, >= 1 an absolute error count —
     * the reference's errorThreshold contract
@@ -65,16 +66,23 @@ object RuleEngine {
     if (threshold >= 1) errors <= threshold
     else total == 0 || errors.toDouble / total <= threshold
 
-  /** All-rule error counts in ONE pass (vs the reference's N passes):
-    * a single aggregate with one count_if per rule. A rule's own
-    * `threshold` (reference per-validation errorThreshold) overrides the
-    * call-level default — still one pass for mixed-tolerance sets.
+  /** THE aggregate list every rule evaluation runs: the row count, then one
+    * `count_if(!rule)` per rule, in rule order. [[validateAll]] runs it as
+    * its own job; a caller that already runs a pass over the frame (a sink
+    * write) can attach it with `Dataset.observe` instead and fold the
+    * observed row with [[foldCounts]] — same counts, no second pass.
+    * Aliases are positional, so two rules sharing a name stay distinct.
     */
-  def validateAll(df: DataFrame, rules: Seq[Rule], threshold: Double = 0.0): Seq[RuleResult] = {
+  def countAggs(rules: Seq[Rule]): Seq[Column] = {
     require(rules.nonEmpty, "empty rule set")
-    val aggs = count(lit(1)).as("total") +:
-      rules.map(r => count_if(!r.strict).as(s"err_${r.name}"))
-    val row = df.agg(aggs.head, aggs.tail: _*).head()
+    count(lit(1)).as("total") +:
+      rules.zipWithIndex.map { case (r, i) => count_if(!r.strict).as(s"err_$i") }
+  }
+
+  /** Folds a [[countAggs]] row into per-rule results. A rule's own
+    * `threshold` (reference per-validation errorThreshold) overrides the
+    * call-level default. */
+  def foldCounts(row: Row, rules: Seq[Rule], threshold: Double = 0.0): Seq[RuleResult] = {
     val total = row.getLong(0)
     rules.zipWithIndex.map { case (r, i) =>
       val errors = row.getLong(i + 1)
@@ -82,6 +90,16 @@ object RuleEngine {
         underThreshold(errors, total, r.threshold.getOrElse(threshold)))
     }
   }
+
+  /** All-rule error counts in ONE pass (vs the reference's N passes): the
+    * [[countAggs]] aggregate as one job — still one pass for
+    * mixed-tolerance sets.
+    */
+  def validateAll(df: DataFrame, rules: Seq[Rule], threshold: Double = 0.0): Seq[RuleResult] = {
+    val aggs = countAggs(rules)
+    foldCounts(df.agg(aggs.head, aggs.tail: _*).head(), rules, threshold)
+  }
+
   /** Up to `n` offending rows for a rule, nested structs flattened to dotted
     * top-level columns — the reference returns sample error rows per failed
     * validation with nested-row flattening
@@ -117,10 +135,17 @@ object RuleEngine {
       rules: Seq[Rule],
       threshold: Double = 0.0,
       numSamples: Int = 5): Seq[RuleResult] =
-    // pair results with rules POSITIONALLY (validateAll preserves order):
-    // a by-name lookup would sample the wrong predicate when two rules
-    // share a name (importers can produce that)
-    validateAll(df, rules, threshold).zip(rules).map { case (r, rule) =>
+    withSamples(df, rules, validateAll(df, rules, threshold), numSamples)
+
+  /** Adds up to `numSamples` offending rows of `df` to each failed result —
+    * one `limit(n)` job per failed rule. `results` pair with `rules`
+    * POSITIONALLY (as [[foldCounts]] returns them): a by-name lookup would
+    * sample the wrong predicate when two rules share a name (importers can
+    * produce that).
+    */
+  def withSamples(df: DataFrame, rules: Seq[Rule], results: Seq[RuleResult],
+      numSamples: Int): Seq[RuleResult] =
+    results.zip(rules).map { case (r, rule) =>
       if (r.success || numSamples <= 0) r
       else {
         val sampleDf = errorSamples(df, rule, numSamples)

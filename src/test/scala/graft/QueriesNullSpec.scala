@@ -64,4 +64,26 @@ class QueriesNullSpec extends SparkSuite {
     (3L to 5L).foreach(k => assert(rows(k) == lookup((k % 3).toInt)))
     (0L to 2L).foreach(k => assert(rows(k).exists(_.startsWith("INVALID_"))))
   }
+
+  test("q20: the re-appended NULL takes the column's own type from the schema") {
+    val dir = java.nio.file.Files.createTempDirectory("graft_q20_types").toString
+    Seq((1L, Option(1), "F"), (2L, None, "O"), (3L, Option(2), null.asInstanceOf[String]))
+      .toDF("l_orderkey", "l_returnflag", "l_linestatus")
+      .write.parquet(s"$dir/lineitem.parquet")
+    Seq("east").toDF("r_name").write.parquet(s"$dir/region.parquet")
+    val out = SparkEntry.queries("q20_all_combinations")(spark, dir)
+    assert(out.schema("l_returnflag").dataType == org.apache.spark.sql.types.IntegerType)
+    assert(out.schema("l_linestatus").dataType == org.apache.spark.sql.types.StringType)
+    val flags = out.collect().map(r => if (r.isNullAt(0)) None else Option(r.getInt(0))).toSet
+    assert(flags == Set(Option(1), Option(2), None))
+  }
+
+  test("boundedLookup: the pre-build guard counts a NULL key like the built lookup") {
+    val keys = Seq(Option(1L), Option(2L), None, None).toDF("k")
+    // 3 slots (1, 2, NULL): the cheap guard fails before the build at cap 2
+    val e = intercept[IllegalArgumentException](Queries.boundedLookup(keys, "k", 2L, "t"))
+    assert(e.getMessage.contains("3 distinct keys before the build"), e.getMessage)
+    val (lookup, n) = Queries.boundedLookup(keys, "k", 3L, "t")
+    assert(n == 3L && lookup.count() == 3L)
+  }
 }

@@ -11,10 +11,22 @@ import org.apache.spark.sql.functions._
 class AppConfigSpec extends SparkSuite {
   private val s = graft.SharedSpark.spark
 
-  test("the reference's SHIPPED application.confs parse: flags, folders, runtime, connections") {
-    val shipped = AppConfig.parse(java.nio.file.Files.readString(
-      java.nio.file.Paths.get("/root/reference/app/src/main/resources/application.conf")),
-      env = _ => None)
+  /** In-repo fixtures under `appconfig/` use the same HOCON constructs as
+    * the reference's shipped confs; the reference checkout's own files are
+    * extra cases, run only when `GRAFT_REFERENCE_DIR` names that checkout. */
+  private def fixture(name: String): String = {
+    val src = scala.io.Source.fromResource(s"appconfig/$name")
+    try src.mkString finally src.close()
+  }
+
+  private def reference(rel: String): String = {
+    val root = sys.env.get("GRAFT_REFERENCE_DIR").map(java.nio.file.Paths.get(_))
+    assume(root.exists(java.nio.file.Files.isDirectory(_)), "GRAFT_REFERENCE_DIR not set to a checkout")
+    java.nio.file.Files.readString(root.get.resolve(rel))
+  }
+
+  private def assertShipped(app: String, mysqlConf: String): Unit = {
+    val shipped = AppConfig.parse(app, env = _ => None)
     assert(shipped.flags("enableCount") && !shipped.flags("enableRecordTracking"))
     assert(shipped.folders("planFilePath").endsWith("customer-create-plan.yaml"))
     assert(shipped.master.contains("local[*]"))
@@ -22,13 +34,20 @@ class AppConfigSpec extends SparkSuite {
     assert(shipped.runtimeConfig("spark.driver.memory") == "6g")
     assert(shipped.runtimeConfig("spark.sql.shuffle.partitions") == "10")
 
-    val mysql = AppConfig.parse(java.nio.file.Files.readString(
-      java.nio.file.Paths.get("/root/reference/app/src/test/resources/sample/conf/mysql.conf")),
-      env = _ => None)
+    val mysql = AppConfig.parse(mysqlConf, env = _ => None)
     val conn = mysql.connections("mysql")
     assert(conn("format") == "jdbc", conn.toString)
     assert(conn("url") == "jdbc:mysql://localhost:3306/customer")
     assert(conn("driver") == "com.mysql.cj.jdbc.Driver")
+  }
+
+  test("shipped-layout application.confs parse: flags, folders, runtime, connections") {
+    assertShipped(fixture("application.conf"), fixture("mysql.conf"))
+  }
+
+  test("the reference's SHIPPED application.confs parse (reference checkout)") {
+    assertShipped(reference("app/src/main/resources/application.conf"),
+      reference("app/src/test/resources/sample/conf/mysql.conf"))
   }
 
   test("env substitution: ${?X} applies only when set, ${X} is mandatory") {
@@ -83,14 +102,18 @@ class AppConfigSpec extends SparkSuite {
     assert(back.columns.sameElements(Array("account_id")))
   }
 
-  test("parser edges: empty connections, dotted block keys, dotted option keys") {
+  private def assertEmptyConnections(dockerConf: String): Unit = {
     // the reference's docker conf declares EMPTY connections (`csv { csv { } }`)
     // — they still register with their format (ConfigParser.scala:70-78)
-    val docker = AppConfig.parse(java.nio.file.Files.readString(
-      java.nio.file.Paths.get("/root/reference/example/docker/data/custom/application.conf")),
-      env = _ => None)
+    val docker = AppConfig.parse(dockerConf, env = _ => None)
     assert(docker.connections.contains("csv") || docker.connections.contains("json")
       || docker.connections.nonEmpty, docker.connections.keySet.toString)
+  }
+
+  test("parser edges: empty connections, dotted block keys, dotted option keys") {
+    assertEmptyConnections(fixture("docker-application.conf"))
+    assert(AppConfig.parse(fixture("docker-application.conf"), env = _ => None).connections ==
+      Map("csv" -> Map("format" -> "csv"), "json" -> Map("format" -> "json")))
     val conf = AppConfig.parse(
       """csv {
         |  files {
@@ -115,6 +138,10 @@ class AppConfigSpec extends SparkSuite {
     // dotted leaf keys inside a connection flatten like the reference's
     // entrySet (one dotted option key)
     assert(conf.connections("mk")("kafka.bootstrap.servers") == "host:9092")
+  }
+
+  test("parser edges: the reference's docker conf registers its empty connections (reference checkout)") {
+    assertEmptyConnections(reference("example/docker/data/custom/application.conf"))
   }
 
   test("enableGenerateData=false skips generation, validations still run") {

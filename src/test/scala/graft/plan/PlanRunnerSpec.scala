@@ -165,4 +165,25 @@ class PlanRunnerSpec extends SparkSuite {
     assert(new java.io.File(s"$root/legacy.json").isFile)
     assert(spark.read.json(s"$root/legacy.json").count() == 10)
   }
+
+  test("ignore sink over an existing target counts every source row and returns") {
+    import scala.concurrent.{Await, Future}
+    import scala.concurrent.ExecutionContext.Implicits.global
+    import scala.concurrent.duration._
+    val in = Files.createTempDirectory("graft_plan_ignore_in").toString
+    spark.range(100).selectExpr("id", "id % 4 AS v").write.mode("overwrite").parquet(in)
+    val root = Files.createTempDirectory("graft_plan_ignore_out").toString
+    Seq(s"$root/x.parquet", s"$root/x").foreach { path =>
+      val plan = PlanRunner.parseJson(
+        s"""{"name": "ign", "source": {"path": "$in"},
+           | "rules": [{"name": "v_small", "expr": "v < 3"}], "keepOnly": true,
+           | "sink": {"path": "$path", "mode": "ignore"}}""".stripMargin)
+      // the second run finds the target in place and writes nothing
+      (1 to 2).foreach { i =>
+        val o = Await.result(Future(PlanRunner.run(spark, plan)), 120.seconds)
+        assert((o.rowsIn, o.rowsOut) == ((100L, 75L)), s"$path run $i")
+      }
+      assert(spark.read.parquet(path).count() == 75)
+    }
+  }
 }
