@@ -449,12 +449,22 @@ object MultiPlanRunner {
     * [[RuleEngine.countAggs]] is attached to the written frame with
     * `Dataset.observe`, so the data is not generated a second time and the
     * FK lookups are not rebuilt. Without a sink, or with an `ignore` sink
-    * (whose write may never run), the counts fall back to one aggregate job
-    * over the frame, the same as [[RuleEngine.validateAll]]
-    * ([[Sinks.ObservedWrite]]). Either way each failed rule takes up to 5
-    * samples in one `limit(n)` job. Validations are resolved before the
-    * first sink is written: an unknown dataset or an expression that fails
-    * to resolve throws with nothing written.
+    * whose target already exists (that write skips its plan), the counts
+    * fall back to one aggregate job over the frame, the same as
+    * [[RuleEngine.validateAll]] ([[Sinks.ObservedWrite]]). Either way each
+    * failed rule takes up to 5 samples in one `limit(n)` job. Validations
+    * are resolved before the first sink is written: an unknown dataset or
+    * an expression that fails to resolve throws with nothing written.
+    *
+    * A rule that resolves but throws while it runs (with ANSI mode on, a
+    * failed CAST or a division by zero) fails the write job of its
+    * dataset's sink, since it runs inside that write. The sinks before it
+    * in insert order are written; it and every later sink are not. An
+    * `overwrite` DIRECTORY sink is cleared by Spark before its job runs, so
+    * its old contents are lost and nothing new replaces them; a single-file
+    * sink keeps its old file (the new one is staged first), and `append` /
+    * `errorifexists` targets are left as they were. Validating after the
+    * writes instead would have written every sink before throwing.
     */
   def run(spark: SparkSession, plan: MultiPlanSpec): MultiPlanOutcome = {
     // duplicate task names would silently corrupt the run: taskByName is
@@ -616,8 +626,7 @@ object MultiPlanRunner {
           None
       }
     }.toMap
-    val validations = plan.validations.map(_.dataset).distinct.map(d => d -> results(d)).toMap
 
-    MultiPlanOutcome(plan.name, order, finalCounts, frames.toMap, validations)
+    MultiPlanOutcome(plan.name, order, finalCounts, frames.toMap, results)
   }
 }

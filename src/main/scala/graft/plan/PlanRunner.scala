@@ -12,8 +12,8 @@ import org.apache.spark.sql.functions._
   * 25-129`) — but the whole row-level stage is ONE declarative Spark plan:
   * annotation, scrubbing and the sink write share a single pass, and
   * rows-in/rows-out come from `observe()` on that same pass (no second scan;
-  * an `ignore` sink counts with one separate job, see
-  * [[Sinks.ObservedWrite]]). Only the per-rule validation report (counts +
+  * an `ignore` sink over an existing target counts with one separate job,
+  * see [[Sinks.ObservedWrite]]). Only the per-rule validation report (counts +
   * error samples) runs extra bounded jobs, and only when rules are declared.
   */
 object PlanRunner {

@@ -56,38 +56,55 @@ object Sinks {
 
   /** A sink write that also evaluates `aggs` over every row of `df`.
     *
-    * With a sink whose mode is not `ignore`, the aggregates ride on the
-    * write's own pass through `Dataset.observe`: no second pass over `df`.
-    * Otherwise they run as one separate aggregate job over `df`: there is
-    * nothing to write, or an `ignore` write over an existing target may
-    * never run its plan (Spark then completes a directory target's
-    * observation with zero counts, and [[write]] returns early for a
-    * single-file one, so its observation never completes). Every other mode
-    * of [[write]] either runs the plan or throws.
+    * When the write runs its plan, the aggregates ride on the write's own
+    * pass through `Dataset.observe`: no second pass over `df`. That is every
+    * mode but `ignore`, and an `ignore` write whose target does not exist
+    * yet; [[run]] checks the target just before writing. Otherwise the
+    * aggregates run as one separate aggregate job over `df`: there is
+    * nothing to write, or an `ignore` write over an existing target skips
+    * its plan (Spark then completes a directory target's observation with
+    * zero counts, and a single-file one's never). If the target appears
+    * between that check and the write, a single-file write reports the
+    * skip and the separate job runs; a directory write is decided by
+    * Spark's own existence check, moments later.
     *
     * `prepare` shapes the written frame ABOVE the observation (a
     * keep-filter, say), so the aggregates still see every row of `df`.
     * Construction analyzes the aggregates, so an expression that fails to
-    * resolve throws here, before anything is written.
+    * resolve throws here, before anything is written. An aggregate that
+    * throws while it runs (an ANSI cast failure, say) fails the write job
+    * itself: see [[MultiPlanRunner.run]] for what that leaves behind.
     */
   final class ObservedWrite(df: DataFrame, sink: Option[SinkSpec], aggs: Seq[Column],
       prepare: DataFrame => DataFrame = identity) {
     require(aggs.nonEmpty, "no aggregates to observe")
     // analyzed here, before any observation exists; run only as the fallback
     private val separate = df.agg(aggs.head, aggs.tail: _*)
-    private val inWrite = sink.exists(!_.mode.equalsIgnoreCase("ignore"))
-    private val obs = Observation()
-    private val toWrite =
-      prepare(if (inWrite) df.observe(obs, aggs.head, aggs.tail: _*) else df)
 
     /** Writes the sink, if any, and returns the aggregate row. Call once. */
-    def run(): Row = {
-      sink.foreach(write(toWrite, _))
-      if (inWrite) Await.result(obs.future, Duration.Inf) else separate.head()
+    def run(): Row = sink match {
+      case Some(s) if !s.mode.equalsIgnoreCase("ignore") || !targetExists(df, s) =>
+        val obs = Observation()
+        if (write(prepare(df.observe(obs, aggs.head, aggs.tail: _*)), s))
+          Await.result(obs.future, Duration.Inf)
+        else separate.head()
+      case Some(s) =>
+        write(prepare(df), s)
+        separate.head()
+      case None => separate.head()
     }
   }
 
-  def write(df: DataFrame, s0: SinkSpec): Unit = {
+  private def targetExists(df: DataFrame, s: SinkSpec): Boolean = {
+    val target = new org.apache.hadoop.fs.Path(s.path)
+    target.getFileSystem(df.sparkSession.sparkContext.hadoopConfiguration).exists(target)
+  }
+
+  /** Writes `df` to the sink. Returns false only when a single-file
+    * `ignore` write finds its target already there and runs nothing; a
+    * directory `ignore` write over an existing target is skipped inside
+    * Spark and returns true. */
+  def write(df: DataFrame, s0: SinkSpec): Boolean = {
     val (df1, s) =
       if (s0.format == "json" && s0.options.get("unwrapTopLevelArray").contains("true") &&
           df.schema.fields.length == 1 && df.schema.fields.head.dataType.typeName == "array")
@@ -110,7 +127,7 @@ object Sinks {
         case "append" => throw new IllegalArgumentException(
           s"sink '${s.path}': mode append cannot target a single file — " +
             "use a directory path or mode overwrite")
-        case "ignore" if fs.exists(target) => return
+        case "ignore" if fs.exists(target) => return false
         case "error" | "errorifexists" if fs.exists(target) =>
           throw new IllegalStateException(s"sink target ${s.path} already exists")
         case _ => ()
@@ -143,5 +160,6 @@ object Sinks {
       val pw = if (s.partitionBy.nonEmpty) w.partitionBy(s.partitionBy: _*) else w
       pw.save(s.path)
     }
+    true
   }
 }

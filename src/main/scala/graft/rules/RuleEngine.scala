@@ -24,9 +24,9 @@ import org.apache.spark.sql.functions._
   * `Dataset.observe` instead ([[graft.plan.Sinks.ObservedWrite]]), so its
   * rules are counted in the pass that writes it. That falls back to one
   * separate aggregate job over the same frame when the dataset has no
-  * sink, or when the sink's mode is `ignore` (such a write may never run
-  * its plan). Failed rules then take their samples with [[withSamples]],
-  * one `limit(n)` job each, on either path.
+  * sink, or when the sink's mode is `ignore` and its target already exists
+  * (that write skips its plan). Failed rules then take their samples with
+  * [[withSamples]], one `limit(n)` job each, on either path.
   */
 object RuleEngine {
 

@@ -178,6 +178,57 @@ class ObservedValidationSpec extends SparkSuite {
     assert(validated <= bare, s"validated run launched $validated jobs, bare run $bare")
   }
 
+  test("an ignore sink over a new target counts in the write's own pass") {
+    val rules = cases.head._2
+    val want = RuleEngine.validateAllWithSamples(frame, rules, 0.0, 3)
+    val dir = tmp("graft_obs_ignore_new")
+    Seq("out", "out.parquet").foreach { name =>
+      val plain = jobsOf { Sinks.write(frame, SinkSpec(path = s"$dir/plain_$name")) }
+      var got: Seq[RuleResult] = Nil
+      val ignored = jobsOf {
+        got = observed(frame, Some(SinkSpec(path = s"$dir/$name", mode = "ignore")), rules, 0.0, 3)
+      }
+      assertSame(got, want)
+      assert(ignored == plain, s"$name: observed ignore write ran $ignored jobs, a plain write $plain")
+      assert(s.read.parquet(s"$dir/$name").count() == 100)
+    }
+  }
+
+  test("a rule that throws at run time fails its sink's write: what each target keeps") {
+    val throwing =
+      """validations:
+        |  - dataset: parents
+        |    rules:
+        |      - {name: numeric_id, expr: "CAST(parent_id AS INT) > 0"}
+        |""".stripMargin
+    def parts(p: String): Int =
+      Option(new java.io.File(p).list()).map(_.count(_.startsWith("part-"))).getOrElse(0)
+    // parents: an overwrite DIRECTORY, then a single file; children: a
+    // directory written after parents in insert order
+    Seq("parents", "parents.parquet").foreach { parentsName =>
+      val out = tmp("graft_obs_runtime")
+      val old = s.range(7).toDF("old")
+      Sinks.write(old, SinkSpec(path = s"$out/$parentsName"))
+      Sinks.write(old, SinkSpec(path = s"$out/children"))
+      val yaml = planYaml(out, throwing)
+        .replace(s"""sink: {path: "$out/parents"}""", s"""sink: {path: "$out/$parentsName"}""")
+      val e = intercept[Exception] { MultiPlanRunner.run(s, MultiPlanRunner.parseYaml(yaml)) }
+      assert(Iterator.iterate[Throwable](e)(_.getCause).takeWhile(_ != null)
+        .exists(_.getMessage.contains("CAST_INVALID_INPUT")), e.toString)
+      if (parentsName == "parents") {
+        // Spark cleared the overwrite directory before the job failed
+        assert(parts(s"$out/parents") == 0)
+      } else {
+        // the single file is staged first, so the old one survives
+        assert(s.read.parquet(s"$out/$parentsName").columns.sameElements(Array("old")))
+        assert(s.read.parquet(s"$out/$parentsName").count() == 7)
+      }
+      // the later sink is never written: its old contents stay
+      assert(s.read.parquet(s"$out/children").columns.sameElements(Array("old")))
+      assert(s.read.parquet(s"$out/children").count() == 7)
+    }
+  }
+
   test("a validation that fails to resolve throws before any sink is written") {
     val out = tmp("graft_obs_unresolved")
     val bad =
