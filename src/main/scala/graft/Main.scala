@@ -1,6 +1,9 @@
 package graft
 
-import graft.pipeline.{FilterConfig, ResumableRunner, RunReport}
+import graft.pipeline.{Alerts, FilterConfig, ResumableRunner, RunReport}
+import graft.plan.{AppConfig, MultiPlanRunner, MultiPlanSpec, Plans, TaskFolders}
+import graft.plan.MultiPlanRunner.MultiPlanOutcome
+import org.apache.spark.sql.SparkSession
 
 /** spark-submit entry point — the deployment surface of the north rule:
   *
@@ -15,141 +18,103 @@ import graft.pipeline.{FilterConfig, ResumableRunner, RunReport}
   * catalog is configured — `spark.read.table` branch), runs the resumable
   * bucketed quality-filter, writes kept+annotated rows, per-partition
   * metrics, and JSON+HTML run reports. Re-running after a crash resumes from
-  * the bucket manifest. `--plan` mode executes a declarative JSON/YAML
-  * [[graft.plan.PlanSpec]] instead (the reference's YAML-plan entry surface).
+  * the bucket manifest.
   *
-  * `--legacy <plan.yaml> <taskFolder> [validationFolder]` runs the
-  * reference's DEPLOYED layout unchanged (its docker/env-var shape:
-  * PLAN_FILE_PATH + TASK_FOLDER_PATH + VALIDATION_FOLDER_PATH): task
-  * summaries resolve to the task file in the folder whose `name:` matches,
-  * the plan's `validations:` references resolve against the validation
-  * folder, generation runs in FK insert order, then each validation source
-  * runs against its declared `options.path`.
+  * Every other mode is a plan, parsed once by the front door
+  * ([[graft.plan.Plans.parse]]) and run once by [[MultiPlanRunner.run]]:
+  * `--plan` takes one document of any dialect; `--legacy <plan.yaml>
+  * <taskFolder> [validationFolder]` runs the reference's DEPLOYED layout
+  * unchanged, as do no args with APPLICATION_CONFIG_PATH (the reference's
+  * `ConfigParser.getConfig` contract: folders, connections and flags from
+  * the conf, whose `${?ENV}` substitutions give env vars the last word) or
+  * with PLAN_FILE_PATH (+ TASK_FOLDER_PATH, VALIDATION_FOLDER_PATH: its
+  * docker contract).
   */
 object Main {
 
   private def readFile(p: String): String =
     new String(java.nio.file.Files.readAllBytes(java.nio.file.Paths.get(p)))
 
-  private def runLegacy(planPath: String, taskFolder: String,
-      validationFolder: Option[String],
-      connections: Map[String, Map[String, String]] = Map.empty,
-      runtimeConf: Map[String, String] = Map.empty,
-      master: Option[String] = None,
-      generate: Boolean = true): Unit = {
-    // application.conf runtime.master + runtime.config apply at SESSION
-    // BUILD time (the reference hands them to its SparkProvider the same
-    // way) — env vars still win on master, and static confs like
-    // spark.driver.memory can only take effect here, never post-create
-    val b = GraftSession.builder(
-      sys.env.getOrElse("SPARK_GRAFT_MASTER",
-        master.getOrElse(s"local[${sys.env.getOrElse("SPARK_GRAFT_CPUS", "8")}]")),
-      sys.env.getOrElse("SPARK_GRAFT_CPUS", "8").toInt)
-    runtimeConf.foreach { case (k, v) => b.config(k, v) }
-    val spark = b.getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    val o = graft.plan.LegacyPlan.runFolder(spark, readFile(planPath), taskFolder,
-      validationFolder, connections, generate)
-    val gen = o.generation
-    println(s"[graft] plan=${gen.plan} order=${gen.insertOrder.mkString(",")} " +
-      s"counts=${gen.insertOrder.map(t => s"$t:${gen.counts(t)}").mkString(",")}")
-    o.validations.foreach { case (ds, results) =>
-      results.foreach { r =>
-        val tag = if (r.success) "ok" else "FAILED"
-        println(s"[graft] validation $ds/${r.rule}: $tag ${r.errors}/${r.total}")
-      }
-    }
-    println(s"[graft] success=${o.success}")
-    spark.stop()
+  def main(args: Array[String]): Unit = {
+    val spark = session(appConfig(args))
+    try run(spark, args).foreach(o =>
+      println(Alerts.summarize(o).linesIterator.map("[graft] " + _).mkString("\n")))
+    finally spark.stop()
   }
 
-  def main(args: Array[String]): Unit = {
-    if (args.headOption.contains("--legacy")) {
-      require(args.length >= 3, "usage: graft.Main --legacy <plan.yaml> <taskFolder> [validationFolder]")
-      runLegacy(args(1), args(2), args.lift(3))
-      return
+  /** application.conf, read only when no args name the work. */
+  private def appConfig(args: Array[String]): Option[AppConfig.Conf] =
+    if (args.nonEmpty) None
+    else sys.env.get("APPLICATION_CONFIG_PATH").map(p => AppConfig.parse(readFile(p)))
+
+  /** Under spark-submit the session comes from the launcher's conf; the
+    * builder only fills in what is not already set. application.conf's
+    * `runtime.master` and `runtime.config` apply here, at SESSION BUILD time
+    * (the reference hands them to its SparkProvider the same way): env vars
+    * still win on master, and static confs like spark.driver.memory can only
+    * take effect here, never post-create. */
+  private def session(conf: Option[AppConfig.Conf]): SparkSession = {
+    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "8")
+    val b = GraftSession.builder(sys.env.getOrElse("SPARK_GRAFT_MASTER",
+      conf.flatMap(_.master).getOrElse(s"local[$cpus]")), cpus.toInt)
+    conf.foreach(_.runtimeConfig.foreach { case (k, v) => b.config(k, v) })
+    val spark = b.getOrCreate()
+    spark.sparkContext.setLogLevel("WARN")
+    spark
+  }
+
+  /** Runs one invocation on `spark`: the plan `args` name, or the bucketed
+    * filter job (None — its report is written under the output dir). */
+  def run(spark: SparkSession, args: Array[String]): Option[MultiPlanOutcome] =
+    plan(args) match {
+      case Some(p) => Some(MultiPlanRunner.run(spark, p))
+      case None =>
+        filterJob(spark, args)
+        None
     }
-    // APPLICATION_CONFIG_PATH (the reference's `ConfigParser.getConfig`
-    // contract): folders/flags/runtime/connections come from the conf,
-    // whose own `${?ENV}` substitutions give env vars the last word
-    if (args.isEmpty && sys.env.contains("APPLICATION_CONFIG_PATH")) {
-      val conf = graft.plan.AppConfig.parse(readFile(sys.env("APPLICATION_CONFIG_PATH")))
-      val planPath = conf.folders.getOrElse("planFilePath",
-        throw new IllegalArgumentException("application.conf: folders.planFilePath missing"))
-      val taskFolder = conf.folders.getOrElse("taskFolderPath",
-        throw new IllegalArgumentException("application.conf: folders.taskFolderPath missing"))
+
+  /** The plan an invocation names, parsed once — None for the bucketed
+    * filter job. */
+  private def plan(args: Array[String]): Option[MultiPlanSpec] = {
+    val named: Option[(String, Option[TaskFolders])] = (args.toList, appConfig(args)) match {
+      case ("--plan" :: file :: Nil, _) => Some((file, None))
+      case ("--legacy" :: file :: tasks :: vals, _) if vals.size <= 1 =>
+        Some((file, Some(TaskFolders(tasks, vals.headOption))))
+      case (("--plan" | "--legacy") :: _, _) => throw new IllegalArgumentException("usage: " +
+        "graft.Main --plan <plan> | --legacy <plan.yaml> <taskFolder> [validationFolder]")
       // flags gate the phases like the reference: enableGenerateData
       // (default true) and enableValidation (default false)
-      val valFolder = conf.folders.get("validationFolderPath")
-        .filter(_ => conf.flags.getOrElse("enableValidation", false))
-      val generate = conf.flags.getOrElse("enableGenerateData", true)
-      if (!generate) System.err.println(
-        "[graft] flags.enableGenerateData=false — generation skipped, validations only")
-      runLegacy(planPath, taskFolder, valFolder, conf.connections,
-        conf.runtimeConfig, conf.master, generate)
-      return
-    }
-    // the reference's docker contract (application.conf `${?PLAN_FILE_PATH}`
-    // etc.): no args + env vars set → the same deployed folder layout
-    if (args.isEmpty && sys.env.contains("PLAN_FILE_PATH")) {
-      val planPath = sys.env("PLAN_FILE_PATH")
-      // default task folder = ../task relative to the plan's folder (the
-      // reference's /opt/app/{plan,task} layout); a bare filename has no
-      // parent to anchor that default, so demand the env var explicitly
-      val taskFolder = sys.env.getOrElse("TASK_FOLDER_PATH",
-        Option(java.nio.file.Paths.get(planPath).getParent)
-          .map(_.resolveSibling("task").toString)
-          .getOrElse(throw new IllegalArgumentException(
-            s"PLAN_FILE_PATH '$planPath' has no parent folder to derive the task " +
-              "folder from — set TASK_FOLDER_PATH")))
-      runLegacy(planPath, taskFolder, sys.env.get("VALIDATION_FOLDER_PATH"))
-      return
-    }
-    if (args.headOption.contains("--plan")) {
-      require(args.length == 2, "usage: graft.Main --plan <plan.yaml|plan.json>")
-      val text = new String(java.nio.file.Files.readAllBytes(java.nio.file.Paths.get(args(1))))
-      val spark = GraftSession.builder(
-        sys.env.getOrElse("SPARK_GRAFT_MASTER", s"local[${sys.env.getOrElse("SPARK_GRAFT_CPUS", "8")}]"),
-        sys.env.getOrElse("SPARK_GRAFT_CPUS", "8").toInt).getOrCreate()
-      spark.sparkContext.setLogLevel("WARN")
-      // dialect dispatch (reference UnifiedConfigDetector): unified config
-      // (version + dataSources) → Unified; `tasks:` → multi-task; else a
-      // single-step filter plan
-      val json = if (text.trim.startsWith("{")) text
-                 else graft.plan.PlanRunner.yamlToJson(text)
-      val parsed = org.json4s.jackson.JsonMethods.parse(json)
-      if (graft.plan.Unified.detect(text)) {
-        val o = graft.plan.Unified.run(spark, text)
-        val results = o.validations.flatMap(_.results)
-        println(s"[graft] unified=${o.name} tasks=${o.generation.insertOrder.mkString(",")} " +
-          s"validations=${results.count(_.success)}/${results.size} success=${o.success}")
-      } else if ((parsed \ "tasks") != org.json4s.JNothing) {
-        val o = graft.plan.MultiPlanRunner.run(spark, graft.plan.MultiPlanRunner.parseJson(json))
-        println(s"[graft] plan=${o.plan} order=${o.insertOrder.mkString(",")} " +
-          s"counts=${o.insertOrder.map(t => s"$t:${o.counts(t)}").mkString(",")} success=${o.success}")
-      } else {
-        val outcome = graft.plan.PlanRunner.run(spark, graft.plan.PlanRunner.parseJson(json))
-        println(s"[graft] plan=${outcome.plan} rows_in=${outcome.rowsIn} rows_out=${outcome.rowsOut} " +
-          s"validations=${outcome.validations.count(_.success)}/${outcome.validations.size} ok")
-        outcome.validations.filterNot(_.success).foreach { v =>
-          println(s"[graft] FAILED ${v.rule}: ${v.errors}/${v.total} sample=${v.samples.headOption.getOrElse(Map.empty)}")
-        }
+      case (Nil, Some(conf)) =>
+        def folder(name: String) = conf.folders.getOrElse(name,
+          throw new IllegalArgumentException(s"application.conf: folders.$name missing"))
+        Some((folder("planFilePath"), Some(TaskFolders(folder("taskFolderPath"),
+          conf.folders.get("validationFolderPath")
+            .filter(_ => conf.flags.getOrElse("enableValidation", false)),
+          conf.connections, conf.flags.getOrElse("enableGenerateData", true)))))
+      case (Nil, None) => sys.env.get("PLAN_FILE_PATH").map { planPath =>
+        // default task folder = ../task relative to the plan's folder (the
+        // reference's docker image keeps plan/ and task/ side by side); a
+        // bare filename has no parent to anchor that default, so demand the
+        // env var explicitly
+        val taskFolder = sys.env.getOrElse("TASK_FOLDER_PATH",
+          Option(java.nio.file.Paths.get(planPath).getParent)
+            .map(_.resolveSibling("task").toString)
+            .getOrElse(throw new IllegalArgumentException(
+              s"PLAN_FILE_PATH '$planPath' has no parent folder to derive the task " +
+                "folder from — set TASK_FOLDER_PATH")))
+        (planPath, Some(TaskFolders(taskFolder, sys.env.get("VALIDATION_FOLDER_PATH"))))
       }
-      spark.stop()
-      return
+      case _ => None
     }
+    named.map { case (file, folders) => Plans.parse(readFile(file), folders) }
+  }
+
+  private def filterJob(spark: SparkSession, args: Array[String]): Unit = {
     require(args.length >= 2, "usage: graft.Main <inputPath> <outputDir> [numBuckets] [runId]")
     val input = args(0)
     val outDir = args(1)
     val numBuckets = if (args.length > 2) args(2).toInt else 16
     val runId = if (args.length > 3) args(3) else s"run_${System.currentTimeMillis()}"
-
-    // under spark-submit the session comes from the launcher's conf; the
-    // builder only fills in what is not already set
-    val spark = GraftSession.builder(
-      sys.env.getOrElse("SPARK_GRAFT_MASTER", s"local[${sys.env.getOrElse("SPARK_GRAFT_CPUS", "8")}]"),
-      sys.env.getOrElse("SPARK_GRAFT_CPUS", "8").toInt).getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
     import spark.implicits._
 
     val table =
@@ -162,6 +127,5 @@ object Main {
     val summary = RunReport.write(runner.readMetrics(), runId, outDir)
     println(s"[graft] buckets processed this invocation: $processed")
     println(s"[graft] ${RunReport.toJson(summary)}")
-    spark.stop()
   }
 }

@@ -14,7 +14,7 @@ object ScaleProbe {
       val c = SyntheticImages.generate(spark, n, 42, cores * 4)
       val df = stage match {
         case "gen" => c.toDF()
-        case "score" => QualityFilter.scoreCols(spark, c.toDF())
+        case "score" => QualityFilter.runDF(spark, c.toDF())
         case "full" => QualityFilter.run(spark, c)
       }
       df.write.mode("overwrite").format("noop").save()

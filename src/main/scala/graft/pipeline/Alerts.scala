@@ -1,6 +1,5 @@
 package graft.pipeline
 
-import graft.plan.PlanRunner.PlanOutcome
 import graft.plan.MultiPlanRunner.MultiPlanOutcome
 import graft.rules.RuleResult
 
@@ -37,27 +36,20 @@ object Alerts {
       s"$mark ${r.rule}: ${r.errors}/${r.total} errors"
     }
 
-  /** Human-readable summary of a single-step plan run. */
-  def summarize(o: PlanOutcome, reportPath: Option[String] = None): String = {
-    val status = if (o.success) "SUCCESS" else "FAILURE"
-    val wait = o.waitMet match {
-      case Some(false) => Seq("wait condition: NOT MET (retries exhausted)")
-      case _ => Nil
-    }
-    (Seq(s"plan '${o.plan}': $status",
-      s"rows in: ${o.rowsIn}, rows out: ${o.rowsOut}") ++
-      wait ++ ruleLines(o.validations) ++
-      reportPath.map(p => s"report: $p").toSeq).mkString("\n")
-  }
-
-  /** Summary of a multi-task plan run. */
+  /** Human-readable summary of a plan run: status, rows per task (a
+    * source task's rows kept of rows read), unmet wait gates, and every
+    * rule's result per dataset. */
   def summarize(o: MultiPlanOutcome): String = {
     val status = if (o.success) "SUCCESS" else "FAILURE"
-    val tasks = o.insertOrder.map(t => s"task $t: ${o.counts(t)} rows")
+    val tasks = o.insertOrder.map(t => s"task $t: ${o.counts.getOrElse(t, -1L)} rows" +
+      o.rowsRead.get(t).fold("")(n => s" of $n read"))
+    val waits = o.waits.toSeq.sortBy(_._1).collect {
+      case (ds, false) => s"[$ds] wait condition: NOT MET (retries exhausted)"
+    }
     val vals = o.validations.toSeq.sortBy(_._1).flatMap { case (ds, rs) =>
       ruleLines(rs).map(l => s"[$ds] $l")
     }
-    (Seq(s"plan '${o.plan}': $status") ++ tasks ++ vals).mkString("\n")
+    (Seq(s"plan '${o.plan}': $status") ++ tasks ++ waits ++ vals).mkString("\n")
   }
 
   /** POST `{"text": summary}` to the webhook. Returns whether the endpoint
@@ -77,13 +69,8 @@ object Alerts {
       resp.statusCode() >= 200 && resp.statusCode() < 300
     }.getOrElse(false)
 
-  /** Alert on a single-step plan outcome. None = trigger didn't fire;
-    * Some(delivered) otherwise. */
-  def alert(o: PlanOutcome, url: String, triggerOn: TriggerOn = OnAll,
-      reportPath: Option[String] = None): Option[Boolean] =
-    if (triggerOn.fires(o.success)) Some(send(url, summarize(o, reportPath))) else None
-
-  /** Alert on a multi-task plan outcome. */
-  def alert(o: MultiPlanOutcome, url: String, triggerOn: TriggerOn): Option[Boolean] =
+  /** Alert on a plan outcome. None = trigger didn't fire; Some(delivered)
+    * otherwise. */
+  def alert(o: MultiPlanOutcome, url: String, triggerOn: TriggerOn = OnAll): Option[Boolean] =
     if (triggerOn.fires(o.success)) Some(send(url, summarize(o))) else None
 }

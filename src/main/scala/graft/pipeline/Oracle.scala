@@ -29,7 +29,7 @@ object Oracle {
   private val symbolRe = java.util.regex.Pattern.compile("[^A-Za-z0-9 \\t\\n\\r]")
 
   /** First failing rule name in the canonical order of
-    * [[QualityFilter.rules]]; None = keep. NULL-valued predicates fail (the
+    * [[QualityFilter.runDF]]; None = keep. NULL-valued predicates fail (the
     * engine's strict-null contract, [[graft.rules.Rule]]).
     */
   def dropReason(r: ImageRow, cfg: FilterConfig): Option[String] = {

@@ -1,23 +1,10 @@
 package graft.pipeline
 
 import graft.corpus.ImageRow
-import graft.functions.{LangId, Perplexity, Scrubber, TextFunctions => TF}
+import graft.functions.{LangId, Perplexity, Scrubber}
 import graft.rules.{Rule, RuleEngine}
 import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
-
-/** Scored input row: ImageRow + model scores (langid + perplexity). */
-final case class ScoredImage(
-    image_id: String,
-    bytes: Array[Byte],
-    w: Int,
-    h: Int,
-    fmt: String,
-    caption: String,
-    phash: Long,
-    lang: String,
-    lang_conf: Double,
-    ppl: Double)
 
 /** Thresholds for the quality rule set — the analog of the reference's
   * per-rule options metadata (`SchemaUtil.scala:540-558`). One instance is
@@ -46,91 +33,25 @@ final case class FilterConfig(
   */
 object QualityFilter {
 
-  /** Model scoring via mapPartitions over the typed Dataset (SURVEY §7.3):
-    * langid + perplexity share one partition-level pass; the models are
-    * broadcast once per executor (they are also JVM-static, but broadcast is
-    * the contract that survives a real cluster with external weights).
-    */
-  def score(spark: SparkSession, input: Dataset[ImageRow]): Dataset[ScoredImage] = {
-    import spark.implicits._
-    val langIdB = spark.sparkContext.broadcast(LangId)
-    val pplB = spark.sparkContext.broadcast(Perplexity)
-    input.mapPartitions { it =>
-      val langId = langIdB.value
-      val ppl = pplB.value
-      it.map { r =>
-        val (lang, conf) = langId.predict(r.caption)
-        ScoredImage(r.image_id, r.bytes, r.w, r.h, r.fmt, r.caption, r.phash,
-          lang, conf, ppl.score(r.caption))
-      }
-    }
-  }
-
-  /** Column-level scoring: the same pure model functions wrapped in ONE
-    * narrow String→struct UDF. Unlike [[score]], non-caption columns (the
-    * image bytes in particular) never round-trip through JVM objects — the
-    * row stays columnar and the surrounding projection stays codegen'd,
-    * which measures ~2× faster end-to-end. Results are IDENTICAL to [[score]]
-    * (same functions; asserted by QualityFilterSpec). Use [[score]] when a
-    * real per-partition model load (external LM) must be amortized.
-    */
-  def scoreCols(spark: SparkSession, input: DataFrame): DataFrame = {
-    val langIdB = spark.sparkContext.broadcast(LangId)
-    val pplB = spark.sparkContext.broadcast(Perplexity)
-    val scoreUdf = udf { (caption: String) =>
-      val (lang, conf) = langIdB.value.predict(caption)
-      (lang, conf, pplB.value.score(caption))
-    }
-    input
-      .withColumn("__s", scoreUdf(col("caption")))
-      .withColumn("lang", col("__s._1"))
-      .withColumn("lang_conf", col("__s._2"))
-      .withColumn("ppl", col("__s._3"))
-      .drop("__s")
-  }
-
-  /** Canonical rule order — part of the oracle contract (first failing rule
-    * is the drop reason). This Column-expression form runs on any frame with
-    * (caption, w, h, fmt, lang, lang_conf, ppl) — it is what the streaming
-    * path uses (stateless projection on readStream). The batch pipeline uses
-    * the semantically-identical [[rulesOnFeatures]] over the single-scan
-    * feature struct (same predicates, ~6 fewer regex passes per row).
-    */
-  def rules(cfg: FilterConfig): Seq[Rule] = {
-    val cap = col("caption")
-    Seq(
-      Rule("caption_missing", cap.isNotNull && TF.tokenCount(cap) > 0),
-      Rule("caption_length", length(cap).between(cfg.minCaptionLen, cfg.maxCaptionLen)),
-      Rule("caption_few_tokens", TF.tokenCount(cap) >= cfg.minTokens),
-      Rule("caption_repetitive", TF.distinctTokenRatio(cap) >= cfg.minDistinctTokenRatio),
-      Rule("caption_symbolic", TF.symbolRatio(cap) <= cfg.maxSymbolRatio),
-      Rule("caption_char_run", !TF.hasCharRun(cap, cfg.maxCharRun)),
-      Rule("image_dims",
-        col("w").between(cfg.minDim, cfg.maxDim) && col("h").between(cfg.minDim, cfg.maxDim)),
-      Rule("image_aspect",
-        greatest(col("w"), col("h")) <= lit(cfg.maxAspect) * least(col("w"), col("h"))),
-      Rule("image_fmt", col("fmt").isin(cfg.allowedFormats: _*)),
-      Rule("lang_unknown",
-        col("lang_conf") >= cfg.minLangConf && col("lang").isin(cfg.allowedLangs: _*)),
-      Rule("high_perplexity", col("ppl") <= cfg.maxPerplexity),
-    )
-  }
-
   /** Field positions inside the fused scorer's tuple result (see [[runDF]]).
     * A plain Tuple8 — NOT a nested case class — because Janino cannot compile
     * the generated accessor call for a case class nested in this object
     * (`QualityFilter$RowScore.lang()` → "No applicable constructor/method
     * found", 1,152 failures per ScaleProbe run in round 1, every task paying
     * an attempted compile + interpreted fallback). Tuple accessors (`_1()`…)
-    * compile fine — the same pattern [[scoreCols]] always used.
+    * compile fine.
     */
+  /** The fused scorer UDF's name, as it appears in executed plans. */
+  val ScorerName = "graft_caption_score"
+
   private val scoreFields = Map(
     "lang" -> "_1", "lang_conf" -> "_2", "ppl" -> "_3", "len" -> "_4",
     "ntok" -> "_5", "ndistinct" -> "_6", "symbols" -> "_7", "has_run" -> "_8")
 
-  /** The same rule set expressed over the extracted feature struct `__s`
-    * (see [[runDF]]): pure numeric comparisons — no regex in the rule
-    * evaluation at all. Order and names MUST stay identical to [[rules]].
+  /** THE rule set, batch and streaming alike, over the extracted feature
+    * struct `__s` (see [[runDF]]): pure numeric comparisons — no regex in
+    * the rule evaluation at all. Canonical order — part of the oracle
+    * contract (first failing rule is the drop reason, [[Oracle]]).
     */
   private def rulesOnFeatures(cfg: FilterConfig): Seq[Rule] = {
     val f = (n: String) => col(s"__s.${scoreFields(n)}")
@@ -157,14 +78,15 @@ object QualityFilter {
   }
 
   /** Full stage: score → annotate(keep, drop_reason) → scrub kept captions.
-    * One pass, no shuffle; scoring via the columnar UDF path so image bytes
-    * never leave Tungsten rows.
+    * One pass, no shuffle; scoring via a columnar UDF so image bytes never
+    * leave Tungsten rows.
     */
   def run(spark: SparkSession, input: Dataset[ImageRow], cfg: FilterConfig = FilterConfig()): DataFrame =
     runDF(spark, input.toDF(), cfg)
 
   /** Same, on an untyped frame with the input_hint schema (the shape coming
-    * off an Iceberg/parquet scan — no Encoder round-trip at all).
+    * off an Iceberg/parquet scan — no Encoder round-trip at all), batch or
+    * streaming: every step is a stateless projection.
     *
     * Physical shape (profiled on 2M rows): two narrow UDFs per row — one
     * fused scorer (langid + perplexity + single-scan features) and, for KEPT
@@ -186,7 +108,7 @@ object QualityFilter {
         (lang, conf, pplB.value.score(caption),
           f.len, f.ntok, f.ndistinct, f.symbols, f.has_run)
       }
-    }
+    }.withName(ScorerName)
     val catNames = Scrubber.categoryNames
     val scrubUdf = udf { (caption: String) =>
       val (t, c) = Scrubber.scrubWithCounts(caption)

@@ -27,7 +27,7 @@ object CorpusSweep {
     files.foreach { f =>
       val text = Files.readString(f)
       try {
-        LegacyPlan.withSpark35Semantics(spark) {
+        MultiPlanRunner.withConfs(spark, LegacyPlan.Spark35Semantics) {
           val tasks = LegacyPlan.parseTaskFile(text)
           require(tasks.nonEmpty, "no steps parsed")
           tasks.foreach { t =>

@@ -22,8 +22,8 @@ import org.json4s._
   *    value, that many child rows — `CardinalityCountAdjustmentProcessor`);
   *  - `options.path` + step `type` become the sink.
   *
-  * Narrowings (documented): `validations:` name references resolve
-  * only when a validation YAML is supplied to [[PlanRunner]] separately.
+  * The plan's `validations:` name references resolve against a validation
+  * folder ([[parseFolder]]) and read their data back after the writes.
   */
 object LegacyPlan {
 
@@ -55,24 +55,12 @@ object LegacyPlan {
           "(expected true/false, yes/no, or on/off)")
     }
 
-  /** Run `f` under the sql semantics the reference's files were authored
-    * for: the reference engine is Spark 3.5 (ansi OFF by default), where
-    * e.g. `element_at(empty, 1)` is NULL and lossy casts never throw.
-    * Spark 4 defaults ansi ON, which turns several shipped reference
-    * examples into runtime errors. Set/restore is confined to this
-    * whole-plan entry point (concurrent OTHER work on the same session
-    * during a legacy run would see the legacy flag — clone the session if
-    * that matters). */
-  def withSpark35Semantics[T](spark: org.apache.spark.sql.SparkSession)(f: => T): T = {
-    val key = "spark.sql.ansi.enabled"
-    val prev = spark.conf.getOption(key)
-    spark.conf.set(key, "false")
-    try f
-    finally prev match {
-      case Some(v) => spark.conf.set(key, v)
-      case None => spark.conf.unset(key)
-    }
-  }
+  /** The sql semantics the reference's files were authored for, set for
+    * every legacy plan's run ([[parsePlan]]): the reference engine is Spark
+    * 3.5 (ansi OFF by default), where e.g. `element_at(empty, 1)` is NULL
+    * and lossy casts never throw. Spark 4 defaults ansi ON, which turns
+    * several shipped reference examples into runtime errors. */
+  val Spark35Semantics: Map[String, String] = Map("spark.sql.ansi.enabled" -> "false")
 
   /** One reference field → a [[FieldDef]]. Generator hints live in the
     * `options` map (`api/.../PlanModels.scala:118-125`).
@@ -316,14 +304,14 @@ object LegacyPlan {
     out.toSeq
   }
 
-  private final case class StepInfo(
+  private[plan] final case class StepInfo(
       task: TaskDef,
       /** Declared `count.perField`, when present (also carried on the
         * task itself — kept here for the FK ratio bookkeeping). */
       perField: Option[PerFieldDef])
 
   /** One reference task FILE → its steps as generation tasks. */
-  def parseTaskFile(text: String): Seq[TaskDef] = parseSteps(text).map(_.task)
+  def parseTaskFile(text: String): Seq[TaskDef] = parseSteps(toJson(text)).map(_.task)
 
   /** `conn` = the named connection's options from application.conf
     * (AppConfig.connections, keyed by the task summary's dataSourceName) —
@@ -331,8 +319,7 @@ object LegacyPlan {
     * STEP winning (`SinkFactory` option layering). Here that means the
     * connection may supply the step's missing `type` (format) and `path`,
     * and its remaining options ride along under the sink's options. */
-  private def parseSteps(text: String, conn: Map[String, String] = Map.empty): Seq[StepInfo] = {
-    val j = toJson(text)
+  private[plan] def parseSteps(j: JValue, conn: Map[String, String] = Map.empty): Seq[StepInfo] = {
     arr(j \ "steps")
       .filter(s => str(s \ "enabled").forall(_ != "false"))
       .map { s =>
@@ -574,7 +561,7 @@ object LegacyPlan {
       val ds = str(t \ "dataSourceName").getOrElse(taskName)
       val text = taskFiles.getOrElse(taskName,
         throw new IllegalArgumentException(s"no task file supplied for '$taskName'"))
-      parseSteps(text, connections.getOrElse(ds, Map.empty)).map(s => (taskName, ds, s))
+      parseSteps(toJson(text), connections.getOrElse(ds, Map.empty)).map(s => (taskName, ds, s))
     }
     // a step name appearing under TWO task files is legal reference YAML
     // (addressed there by (dataSource, step)); the engine's task names must
@@ -742,7 +729,8 @@ object LegacyPlan {
         case None => t
       }
     }
-    MultiPlanSpec(planName, seed, tasks, fks.map(_._1))
+    MultiPlanSpec(planName, seed, tasks, fks.map(_._1),
+      runtime = PlanRuntime(sparkConf = Spark35Semantics))
   }
 
   private def stripQualifier(taskName: String): String =
@@ -782,52 +770,32 @@ object LegacyPlan {
     } finally stream.close()
   }
 
-  final case class FolderOutcome(
-      generation: MultiPlanRunner.MultiPlanOutcome,
-      /** (dataSource, results) per resolved validation source. */
-      validations: Seq[(String, Seq[graft.rules.RuleResult])]) {
-    def success: Boolean =
-      generation.success && validations.forall(_._2.forall(_.success))
-  }
-
-  /** The reference's DEPLOYED layout in one call (its docker/env-var
-    * shape: plan file + task folder + validation folder): resolve task
-    * files by name, generate in FK insert order (sinks write), then run
-    * each referenced validation source against its declared
-    * `options.path`. A validation source without a path fails loudly —
-    * guessing a generated frame would validate the wrong dataset.
+  /** The reference's DEPLOYED layout in one plan (its docker/env-var shape:
+    * plan file + task folder + validation folder): resolve task files by
+    * name ([[namedTexts]]), generate in FK insert order (sinks write), then
+    * validate each referenced validation source against the data at its
+    * declared `options.path`, read back after the writes. A validation
+    * source without a path fails loudly — guessing a generated frame would
+    * validate the wrong dataset. `folders.generate = false` (reference
+    * `flags.enableGenerateData`) skips generation: the validations still
+    * run on existing data.
     */
-  def runFolder(spark: org.apache.spark.sql.SparkSession, planText: String,
-      taskFolder: String, validationFolder: Option[String] = None,
-      connections: Map[String, Map[String, String]] = Map.empty,
-      generate: Boolean = true): FolderOutcome = withSpark35Semantics(spark) {
-    // the whole generate+validate body runs under the Spark 3.5 semantics
-    // the reference's files were authored for — previously only CorpusSweep
-    // wrapped this, so the production folder entry point ran ANSI-on and
-    // could fail at runtime on the same files the sweep validated
-    val plan = parsePlan(planText, namedTexts(taskFolder), connections)
-    // flags.enableGenerateData=false (reference FlagsConfig): skip the
-    // generation phase entirely — validations still run on existing data
-    val o =
-      if (generate) MultiPlanRunner.run(spark, plan)
-      else MultiPlanRunner.MultiPlanOutcome(plan.name, Nil, Map.empty, Map.empty, Map.empty)
-    val validationTexts = validationFolder.map(namedTexts(_).values.toSeq).getOrElse(Nil)
+  def parseFolder(planText: String, folders: TaskFolders): MultiPlanSpec = {
+    val plan = parsePlan(planText, namedTexts(folders.taskFolder), folders.connections)
+    val validationTexts = folders.validationFolder.map(namedTexts(_).values.toSeq).getOrElse(Nil)
     val validations = resolveValidations(planText, validationTexts).map { sv =>
-      // a validation source must say where its data lives; guessing a
-      // generated frame would validate the WRONG dataset and report a
-      // verdict about data the validation never targeted
       val path = sv.options.getOrElse("path", throw new IllegalArgumentException(
         s"validation source '${sv.dataSource}' declares no options.path — " +
           "cannot infer which dataset it targets"))
       // the source's OTHER reader options (header, delimiter, rowTag...)
       // must reach the reader — a csv read without its declared header
       // option yields _c0.. columns and validates the header row as data
-      val df = Sinks.readBack(spark, SinkSpec(
+      ValidationDef(sv.dataSource, Nil, entries = sv.entries, readBack = Some(SinkSpec(
         format = sv.options.getOrElse("format", "parquet"),
-        path = path, options = sv.options - "path" - "format"))
-      sv.dataSource -> graft.rules.LegacyValidation.validate(df, sv)
+        path = path, options = sv.options - "path" - "format")))
     }
-    FolderOutcome(o, validations)
+    if (folders.generate) plan.copy(validations = validations)
+    else plan.copy(tasks = Nil, relationships = Nil, validations = validations)
   }
 
   /** Resolve the plan's `validations: [name, ...]` references against a set

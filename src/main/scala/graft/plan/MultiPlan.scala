@@ -1,18 +1,20 @@
 package graft.plan
 
 import graft.generator._
-import graft.rules.{Rule, RuleEngine, RuleResult}
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import graft.rules.{LegacyValidation, Rule, RuleEngine, RuleResult, WaitCondition}
+import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
 
-/** Multi-task plan IR — the reference's full plan experience
+/** THE plan IR — the reference's full plan experience
   * (`core/parser/PlanParser.scala` ~329 LoC + `PlanProcessor`): several
   * generation tasks, FK relationships between them, and validations, all in
-  * ONE YAML. [[PlanSpec]] covers the single-step filter plan; this covers
-  * the generate-a-relational-schema side:
+  * ONE YAML. Every dialect lowers into it ([[Plans.parse]]: the filter plan
+  * [[PlanSpec]], this multi-task document, [[Unified]] and [[LegacyPlan]]),
+  * and [[MultiPlanRunner.run]] is the one executor:
   *
   *  - `tasks`: each generates `count` rows from typed field definitions
-  *    (the full [[FieldSpec]] vocabulary by name);
+  *    (the full [[FieldSpec]] vocabulary by name), or reads a source
+  *    ([[SourceStep]], the filter plan);
   *  - `relationships`: `child.col → parent.col` foreign keys, executed in
   *    Kahn insert order ([[ForeignKeys.insertOrder]]) with the
   *    broadcast-sampling join ([[ForeignKeys.assignKeys]] — the big side
@@ -28,7 +30,24 @@ final case class MultiPlanSpec(
     seed: Long = 42L,
     tasks: Seq[TaskDef],
     relationships: Seq[RelationshipDef] = Nil,
-    validations: Seq[ValidationDef] = Nil)
+    validations: Seq[ValidationDef] = Nil,
+    runtime: PlanRuntime = PlanRuntime())
+
+/** How a plan runs beyond its tasks and validations — the unified config's
+  * run flags and the legacy dialect's Spark 3.5 semantics lower into it:
+  * session confs set for the run and restored after it, error samples per
+  * failed rule, record tracking, a folder for one JSON report per run. */
+final case class PlanRuntime(
+    sparkConf: Map[String, String] = Map.empty,
+    numErrorSamples: Int = 5,
+    tracking: Option[Tracking] = None,
+    reportFolder: Option[String] = None)
+
+/** Record tracking ([[graft.generator.RecordTracking]]): after the writes,
+  * each task with a sink appends its `keys` columns (all columns without
+  * keys) under `folder`; with `delete`, the run removes those rows from
+  * every sink INSTEAD of generating. */
+final case class Tracking(folder: String, keys: Map[String, Seq[String]], delete: Boolean = false)
 
 final case class TaskDef(
     name: String,
@@ -40,7 +59,9 @@ final case class TaskDef(
       * min/max range, or weighted `"n->w"` choices. With an FK on the
       * same fields the runner fans children out of the parent frame
       * instead ([[Generator.fanOutChildren]]). */
-    perField: Option[PerFieldDef] = None)
+    perField: Option[PerFieldDef] = None,
+    /** Read this source instead of generating: the filter plan's task. */
+    read: Option[SourceStep] = None)
 
 /** `count.perField` in both dialects: fieldNames + one of count /
   * min+max / weighted oneOf entries (`"3->0.7"` — the reference's
@@ -98,16 +119,31 @@ final case class RelationshipDef(from: String, to: String, ratio: Option[Double]
   }
   def childTable: String = split(from)._1
   def childCols: Seq[String] = split(from)._2
-  def childCol: String = childCols.head
   def parentTable: String = split(to)._1
   def parentCols: Seq[String] = split(to)._2
-  def parentCol: String = parentCols.head
 }
 
+/** One validation block of a dataset: SQL `rules` under `errorThreshold`,
+  * plus the parsed entries of the unified and legacy grammar
+  * ([[LegacyValidation.parseValidation]]), `waits` awaited once every sink
+  * is written, and `readBack`: validate the data at that sink, read back
+  * after the writes, instead of the task named `dataset`. */
 final case class ValidationDef(
     dataset: String,
     rules: Seq[RuleSpec],
-    errorThreshold: Double = 0.0)
+    errorThreshold: Double = 0.0,
+    entries: Seq[LegacyValidation.ParsedEntry] = Nil,
+    waits: Seq[WaitCondition] = Nil,
+    readBack: Option[SinkSpec] = None) {
+
+  /** The declared rules, then the entries' rules without a pre-filter. */
+  def rowRules: Seq[Rule] =
+    rules.map(r => Rule(r.name, expr(r.expr), Some(errorThreshold))) ++
+      entries.filter(_.preFilter.isEmpty).flatMap(_.rules)
+
+  /** Are the row rules counted inside the dataset's own sink write? */
+  def observed: Boolean = waits.isEmpty && readBack.isEmpty
+}
 
 /** Per-field generator options beyond the core type dispatch — key names
   * match the reference's option constants verbatim
@@ -420,41 +456,80 @@ object MultiPlanRunner {
   final case class MultiPlanOutcome(
       plan: String,
       insertOrder: Seq[String],
-      /** Final per-task row counts (after cardinality adjustment). */
+      /** Final per-task row counts (after cardinality adjustment); a source
+        * task's rows kept, -1 when no pass counted them. */
       counts: Map[String, Long],
       frames: Map[String, DataFrame],
-      validations: Map[String, Seq[RuleResult]]) {
-    def success: Boolean = validations.values.flatten.forall(_.success)
+      validations: Map[String, Seq[RuleResult]],
+      /** Source task → rows read, -1 when no pass counted them. */
+      rowsRead: Map[String, Long] = Map.empty,
+      /** Dataset → were its wait gates met (the run goes on either way). */
+      waits: Map[String, Boolean] = Map.empty,
+      /** Task → (rows before, rows after) of a delete-tracked run. */
+      deleted: Map[String, (Long, Long)] = Map.empty) {
+    def success: Boolean =
+      validations.values.flatten.forall(_.success) && waits.values.forall(identity)
   }
 
-  def parseYaml(text: String): MultiPlanSpec = parseJson(PlanRunner.yamlToJson(text))
+  def parseYaml(text: String): MultiPlanSpec = parseJson(graft.util.Jsons.yamlToJson(text))
 
-  def parseJson(text: String): MultiPlanSpec = {
-    import org.json4s._
-    import org.json4s.jackson.JsonMethods
-    implicit val formats: Formats = DefaultFormats
-    JsonMethods.parse(text).extract[MultiPlanSpec]
+  def parseJson(text: String): MultiPlanSpec = parse(org.json4s.jackson.JsonMethods.parse(text))
+
+  /** The multi-task dialect: what only the other dialects lower into
+    * (source tasks, parsed entries, [[PlanRuntime]]) is not read. */
+  private[plan] def parse(doc: org.json4s.JValue): MultiPlanSpec = {
+    implicit val formats: org.json4s.Formats = org.json4s.DefaultFormats
+    val p = doc.extract[MultiPlanSpec]
+    MultiPlanSpec(p.name, p.seed, p.tasks.map(_.copy(read = None)), p.relationships,
+      p.validations.map(v => ValidationDef(v.dataset, v.rules, v.errorThreshold)))
   }
 
   /** Internal per-row identity for deterministic FK sampling: unique by
     * construction, dropped before the frames are returned/written. */
   private val RowId = "__graft_rid"
 
-  /** Generates every task in FK insert order, writes the sinks in that
-    * order, and validates.
+  /** Runs `f` with `confs` set on the session, restoring the previous
+    * values after it (concurrent OTHER work on the same session sees them
+    * meanwhile). A static conf fails clearly, not with a bare Spark error. */
+  def withConfs[T](spark: SparkSession, confs: Map[String, String])(f: => T): T = {
+    val set = scala.collection.mutable.ArrayBuffer.empty[(String, Option[String])]
+    try {
+      confs.foreach { case (k, v) =>
+        val prev = spark.conf.getOption(k)
+        try spark.conf.set(k, v) catch {
+          case e: org.apache.spark.sql.AnalysisException => throw new IllegalArgumentException(
+            s"spark conf '$k' cannot be set on a running session (static conf) — " +
+              "pass it at spark-submit time", e)
+        }
+        set += k -> prev
+      }
+      f
+    } finally set.reverseIterator.foreach { case (k, prev) =>
+      prev.fold(spark.conf.unset(k))(spark.conf.set(k, _))
+    }
+  }
+
+  /** Runs a plan of any dialect under its session confs: generates (or
+    * reads) every task in FK insert order, writes the sinks in that order,
+    * and validates; with a report folder, reports the run there. A tracking
+    * `delete` removes the tracked rows from every sink instead.
     *
-    * All validation blocks of one dataset merge, in declaration order, into
-    * one rule list; each block's `errorThreshold` stays on its own rules.
-    * A validated dataset with a sink is counted in the pass that writes it:
-    * [[RuleEngine.countAggs]] is attached to the written frame with
-    * `Dataset.observe`, so the data is not generated a second time and the
-    * FK lookups are not rebuilt. Without a sink, or with an `ignore` sink
-    * whose target already exists (that write skips its plan), the counts
-    * fall back to one aggregate job over the frame, the same as
-    * [[RuleEngine.validateAll]] ([[Sinks.ObservedWrite]]). Either way each
-    * failed rule takes up to 5 samples in one `limit(n)` job. Validations
-    * are resolved before the first sink is written: an unknown dataset or
-    * an expression that fails to resolve throws with nothing written.
+    * All observed validation blocks of one dataset (no gate, no read-back)
+    * merge, in declaration order, into one rule list; each block's
+    * `errorThreshold` stays on its own rules. A validated dataset with a
+    * sink is counted in the pass that writes it: [[RuleEngine.countAggs]]
+    * is attached to the written frame with `Dataset.observe`, so the data
+    * is not generated a second time and the FK lookups are not rebuilt; a
+    * source task's rows read and kept ride along, below its scrub. Without
+    * a sink, or with an `ignore` sink whose target already exists (that
+    * write skips its plan), the counts fall back to one aggregate job over
+    * the frame ([[Sinks.ObservedWrite]]). Each failed rule takes its samples
+    * in one `limit(n)` job. Observed validations are resolved before the
+    * first sink is written: an unknown dataset or an expression that fails
+    * to resolve throws with nothing written. After the writes (and record
+    * tracking), each block awaits its gates, then validates what no write
+    * counted (gated and read-back row rules, pre-filtered rules,
+    * dataset-level checks) in jobs of their own.
     *
     * A rule that resolves but throws while it runs (with ANSI mode on, a
     * failed CAST or a division by zero) fails the write job of its
@@ -466,7 +541,21 @@ object MultiPlanRunner {
     * `errorifexists` targets are left as they were. Validating after the
     * writes instead would have written every sink before throwing.
     */
-  def run(spark: SparkSession, plan: MultiPlanSpec): MultiPlanOutcome = {
+  def run(spark: SparkSession, plan: MultiPlanSpec): MultiPlanOutcome =
+    withConfs(spark, plan.runtime.sparkConf) {
+      (plan.runtime.tracking.filter(_.delete), plan.runtime.reportFolder) match {
+        case (Some(t), _) => deleteTracked(spark, plan, t)
+        case (None, Some(dir)) =>
+          // per-task write metrics (the reference's SparkRecordListener)
+          // off the scheduler bus — no extra job
+          val (o, rec) = graft.pipeline.RecordListener.around(spark)(execute(spark, plan))
+          writeReport(o, dir, rec)
+          o
+        case (None, None) => execute(spark, plan)
+      }
+    }
+
+  private def execute(spark: SparkSession, plan: MultiPlanSpec): MultiPlanOutcome = {
     // duplicate task names would silently corrupt the run: taskByName is
     // last-wins, insertOrder emits the name once per occurrence — one task
     // never generates and the survivor runs twice. Fail loudly instead.
@@ -478,13 +567,14 @@ object MultiPlanRunner {
           "with relationship table.column endpoints)")
     }
     val taskByName = plan.tasks.map(t => t.name -> t).toMap
-    // every validation block of a dataset, merged in declaration order; a
-    // block's errorThreshold travels on its own rules
-    val rulesByDataset: Map[String, Seq[Rule]] = plan.validations.map { v =>
-      if (!taskByName.contains(v.dataset))
+    plan.validations.foreach { v =>
+      if (v.readBack.isEmpty && !taskByName.contains(v.dataset))
         throw new IllegalArgumentException(s"validation references unknown dataset '${v.dataset}'")
-      v.dataset -> v.rules.map(r => Rule(r.name, expr(r.expr), Some(v.errorThreshold)))
-    }.groupMapReduce(_._1)(_._2)(_ ++ _)
+    }
+    // every observed block of a dataset, merged in declaration order; a
+    // block's errorThreshold travels on its own rules
+    val rules: Map[String, Seq[Rule]] = plan.validations.filter(_.observed)
+      .groupMapReduce(_.dataset)(_.rowRules)(_ ++ _).withDefaultValue(Nil)
     plan.relationships.foreach { r =>
       require(taskByName.contains(r.childTable) && taskByName.contains(r.parentTable),
         s"relationship ${r.from} -> ${r.to} references an undeclared task " +
@@ -492,6 +582,8 @@ object MultiPlanRunner {
           "schema-qualified endpoints like db.table.col are not supported)")
       require(r.childCols.size == r.parentCols.size,
         s"relationship ${r.from} -> ${r.to}: child and parent field lists differ in arity")
+      require(taskByName(r.childTable).read.isEmpty,
+        s"relationship ${r.from} -> ${r.to}: a task that reads a source takes no generated keys")
     }
     val edges = plan.relationships.map(r => r.parentTable -> r.childTable)
     val order = ForeignKeys.insertOrder(plan.tasks.map(_.name), edges)
@@ -501,11 +593,23 @@ object MultiPlanRunner {
         case r if r.ratio.isDefined => (r.parentTable, r.childTable, r.ratio.get)
       })
 
+    // a source task (the filter plan) holds its gate, then reads and
+    // annotates its source with its dataset's rules; what its sink writes
+    // is shaped (scrubbed, kept only) above that frame
+    val sources = plan.tasks.flatMap(t => t.read.map(t.name -> _)).toMap
+    val frames = scala.collection.mutable.LinkedHashMap.empty[String, DataFrame]
+    val waits = scala.collection.mutable.Map.empty[String, Boolean]
+    sources.foreach { case (name, s) =>
+      s.gate.foreach(g => waits(name) = g.await(spark))
+      frames(name) = s.annotate(spark, rules(name))
+    }
+    def shape(name: String): DataFrame => DataFrame =
+      sources.get(name).fold[DataFrame => DataFrame](identity)(_.shape(rules(name)))
+    var finalCounts = counts ++ sources.keys.map(_ -> -1L)
+
     // generate parents before children so every FK samples from a frame
     // that already exists; one extra sequential field is the row identity
-    val frames = scala.collection.mutable.LinkedHashMap.empty[String, DataFrame]
-    var finalCounts = counts
-    order.foreach { name =>
+    order.filter(taskByName(_).read.isEmpty).foreach { name =>
       val task = taskByName(name)
       val taskSeed = plan.seed ^ name.hashCode.toLong
       val rels = plan.relationships.filter(_.childTable == name)
@@ -608,25 +712,101 @@ object MultiPlanRunner {
       frames(name) = df.drop(RowId).drop(omitted: _*)
     }
 
-    // a validated dataset's rules are counted in the pass that writes its
-    // sink; every write is built before the first one runs, so a rule that
-    // fails to resolve throws before anything is written
-    val checked = rulesByDataset.map { case (name, rules) =>
-      name -> (rules,
-        new Sinks.ObservedWrite(frames(name), taskByName(name).sink, RuleEngine.countAggs(rules)))
-    }
+    // a dataset's rules (and a source task's rows read and kept) are
+    // counted in the pass that writes its sink; every write is built before
+    // the first one runs, so a rule that fails to resolve throws before
+    // anything is written
+    val writes = order.flatMap { name =>
+      val task = taskByName(name)
+      val aggs = sources.get(name).fold(Seq.empty[Column])(_.readAndKept(rules(name))) ++
+        (if (rules(name).isEmpty) Nil else RuleEngine.countAggs(rules(name)))
+      if (aggs.isEmpty || task.sink.isEmpty && rules(name).isEmpty) None
+      else Some(name -> new Sinks.ObservedWrite(frames(name), task.sink, aggs, shape(name)))
+    }.toMap
     // sinks, in insert order (FK-safe for a consuming system)
-    val results = order.flatMap { name =>
-      checked.get(name) match {
-        case Some((rules, w)) =>
-          Some(name -> RuleEngine.withSamples(frames(name), rules,
-            RuleEngine.foldCounts(w.run(), rules), numSamples = 5))
+    val rowsRead = scala.collection.mutable.Map(sources.keys.map(_ -> -1L).toSeq: _*)
+    val observed = order.flatMap { name =>
+      writes.get(name) match {
+        case Some(w) =>
+          val row = w.run()
+          val skip = if (sources.contains(name)) {
+            rowsRead(name) = row.getLong(0)
+            finalCounts += name -> row.getLong(1)
+            2
+          } else 0
+          if (rules(name).isEmpty) None
+          else Some(name -> RuleEngine.withSamples(frames(name), rules(name), RuleEngine.foldCounts(
+            Row.fromSeq(row.toSeq.drop(skip)), rules(name)), plan.runtime.numErrorSamples).iterator)
         case None =>
-          taskByName(name).sink.foreach(Sinks.write(frames(name), _))
+          taskByName(name).sink.foreach(Sinks.write(shape(name)(frames(name)), _))
           None
       }
     }.toMap
 
-    MultiPlanOutcome(plan.name, order, finalCounts, frames.toMap, results)
+    plan.runtime.tracking.foreach { t =>
+      order.filter(taskByName(_).sink.isDefined).foreach { name =>
+        RecordTracking.track(frames(name), t.keys.getOrElse(name, Nil), t.folder, plan.name, name)
+      }
+    }
+
+    // each block's results: its share of the dataset's observed list, or
+    // (gated, read back) its row rules now; then what needs its own jobs
+    val results = plan.validations.map { v =>
+      if (v.waits.nonEmpty)
+        waits(v.dataset) = v.waits.forall(_.await(spark)) && waits.getOrElse(v.dataset, true)
+      val frame = v.readBack.map(Sinks.readBack(spark, _)).getOrElse(frames(v.dataset))
+      val row =
+        if (v.observed) Seq.fill(v.rowRules.size)(observed(v.dataset).next())
+        else RuleEngine.validateAllWithSamples(frame, v.rowRules,
+          numSamples = plan.runtime.numErrorSamples)
+      v.dataset -> (row ++ LegacyValidation.filteredAndDatasetChecks(
+        frame, v.entries, 0.0, plan.runtime.numErrorSamples))
+    }.groupMapReduce(_._1)(_._2)(_ ++ _)
+
+    MultiPlanOutcome(plan.name, order, finalCounts,
+      frames.map { case (n, df) => n -> shape(n)(df) }.toMap, results, rowsRead.toMap, waits.toMap)
+  }
+
+  /** Delete mode runs INSTEAD of generation (reference semantics): the
+    * tracked rows leave every sink, children before parents — a file sink
+    * rewritten through the SAME [[Sinks.write]] conventions that produced
+    * its layout, a database table by batched keyed DELETEs. */
+  private def deleteTracked(spark: SparkSession, plan: MultiPlanSpec, t: Tracking): MultiPlanOutcome = {
+    val sinks = plan.tasks.flatMap(task => task.sink.map(task.name -> _)).toMap
+    val names = plan.tasks.map(_.name)
+    val deleted = ForeignKeys.deleteOrder(names, plan.relationships.map(r => r.parentTable -> r.childTable)
+        .filter { case (p, c) => names.contains(p) && names.contains(c) }).flatMap { name =>
+      sinks.get(name).flatMap {
+        case s if s.format == "jdbc" => RecordTracking.deleteTrackedFromJdbc(
+          spark, s.options("url"), s.path, t.folder, plan.name, name).map(name -> _)
+        case s =>
+          require(!s.options.get("unwrapTopLevelArray").contains("true"),
+            s"step '$name': delete-generated-records cannot round-trip an " +
+              "unwrapTopLevelArray sink (written as a bare JSON array document)")
+          RecordTracking.deleteTrackedFromFiles(spark, Sinks.readBack(spark, s),
+            df => Sinks.write(df, s.copy(mode = "overwrite")), t.folder, plan.name, name)
+            .map(name -> _)
+      }
+    }.toMap
+    MultiPlanOutcome(plan.name, names, Map.empty, Map.empty, Map.empty, deleted = deleted)
+  }
+
+  /** One JSON report per run, timestamped: successive runs (a
+    * validate-existing pass after a generation pass) never clobber. */
+  private def writeReport(o: MultiPlanOutcome, dir: String,
+      rec: graft.pipeline.RecordListener): Unit = {
+    import graft.util.Jsons.quote
+    val counts = o.insertOrder.map(t => s"${quote(t)}:${o.counts.getOrElse(t, 0L)}")
+    val vals = o.validations.toSeq.sortBy(_._1).flatMap { case (step, rs) => rs.map(r =>
+      s"""{"step":${quote(step)},"rule":${quote(r.rule)},"total":${r.total},""" +
+        s""""errors":${r.errors},"success":${r.success}}""") }
+    java.nio.file.Files.writeString(
+      java.nio.file.Files.createDirectories(java.nio.file.Paths.get(dir))
+        .resolve(s"report_${o.plan}_${System.currentTimeMillis()}.json"),
+      s"""{"name":${quote(o.plan)},"success":${o.success},""" +
+        s""""recordsWritten":${rec.recordsWritten},""" +
+        s""""recordsPerSec":${math.round(rec.recordsPerSec)},"writeTasks":${rec.tasks.size},""" +
+        s""""counts":${counts.mkString("{", ",", "}")},"validations":${vals.mkString("[", ",", "]")}}""" +
+        "\n")
   }
 }

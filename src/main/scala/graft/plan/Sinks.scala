@@ -29,7 +29,10 @@ import scala.concurrent.duration.Duration
   *  - `unwrapTopLevelArray` (reference BatchSinkWriter.scala:199-226): a
   *    single-array-field frame writes as ONE bare JSON array (`[...]`) —
   *    rows are flattened into a single array first, so a multi-row frame
-  *    still yields one valid JSON document, not concatenated arrays.
+  *    still yields one valid JSON document, not concatenated arrays;
+  *  - format `jdbc`: `path` names the table (unless `options.dbtable`
+  *    does), `options.url` the database — the unified config's
+  *    auto-discovered tables insert back this way.
   */
 object Sinks {
 
@@ -105,6 +108,10 @@ object Sinks {
     * directory `ignore` write over an existing target is skipped inside
     * Spark and returns true. */
   def write(df: DataFrame, s0: SinkSpec): Boolean = {
+    if (s0.format == "jdbc") {
+      df.write.mode(s0.mode).format("jdbc").options(Map("dbtable" -> s0.path) ++ s0.options).save()
+      return true
+    }
     val (df1, s) =
       if (s0.format == "json" && s0.options.get("unwrapTopLevelArray").contains("true") &&
           df.schema.fields.length == 1 && df.schema.fields.head.dataType.typeName == "array")

@@ -1,7 +1,6 @@
 package graft.plan
 
-import graft.rules.{LegacyValidation, RuleResult}
-import org.apache.spark.sql.SparkSession
+import graft.rules.LegacyValidation
 import org.json4s._
 
 /** Adapter for the reference's UNIFIED single-file config — its modern
@@ -11,7 +10,7 @@ import org.json4s._
   * sources (connection + steps), per-step fields AND inline validations
   * (with wait conditions), top-level foreign keys, and run config.
   *
-  * Mapping onto this engine:
+  * Lowering into the one plan IR ([[MultiPlanSpec]]):
   *  - every step of every data source → one generation task (field options
   *    reuse the [[LegacyPlan]] vocabulary — same `options` map shape);
   *  - file-typed connections (parquet/csv/json/orc) become sinks at
@@ -21,46 +20,20 @@ import org.json4s._
   *    [[graft.sinks.HttpSink]]);
   *  - `foreignKeys` (source → generate, addressed by (dataSource, step,
   *    fields)) → [[RelationshipDef]]s with cardinality ratios;
-  *  - inline step validations → [[LegacyValidation.parseValidation]]
-  *    (expr / field / groupBy / fieldNames — shared entry grammar), with
-  *    `waitCondition` gates awaited before validating;
-  *  - `config.validation.numSampleErrorRecords` → error-sample count;
+  *  - inline step validations → [[ValidationDef]]s carrying the
+  *    [[LegacyValidation.parseValidation]] entries (expr / field / groupBy /
+  *    fieldNames — shared entry grammar): one for the step's ungated
+  *    entries, one for those with a `waitCondition`, under those gates;
+  *  - the `config:` block → [[PlanRuntime]] ([[parse]] lists the flags);
   *    `sinkOptions.seed` → the deterministic seed.
   */
 object Unified {
 
-  final case class StepValidation(
-      step: String,
-      results: Seq[RuleResult],
-      waitMet: Boolean)
-
-  final case class UnifiedOutcome(
-      name: String,
-      generation: graft.plan.MultiPlanRunner.MultiPlanOutcome,
-      validations: Seq[StepValidation],
-      /** step → (rows before, rows after) for delete-generated-records
-        * runs (`enableDeleteGeneratedRecords`). */
-      deleted: Map[String, (Long, Long)] = Map.empty) {
-    def success: Boolean =
-      validations.forall(v => v.waitMet && v.results.forall(_.success))
-  }
-
-  def detect(text: String): Boolean = {
-    val j = parseJ(text)
-    (j \ "dataSources") != JNothing && (j \ "version") != JNothing
-  }
-
   import graft.util.Jsons.{str, arr}
 
-  private def parseJ(text: String): JValue = graft.util.Jsons.parse(text)
-
-  // ONE definition for both dialects (LegacyPlan owns it): the next format
-  // addition or jar-blocked check must not land in only one of the two
-  private def FileFormats = LegacyPlan.FileFormats
-
-  /** Parse to the generation plan plus per-step raw validation entries. */
-  def parse(text: String): (MultiPlanSpec, Map[String, Seq[JValue]]) = {
-    val j = parseJ(text)
+  /** The steps, relationships and seed, plus each step's raw validation
+    * entries. */
+  private def declaredSteps(j: JValue): (MultiPlanSpec, Map[String, Seq[JValue]]) = {
     val name = str(j \ "name").getOrElse("unified")
     val seed = str(j \ "sinkOptions" \ "seed").flatMap(_.toLongOption).getOrElse(42L)
 
@@ -73,11 +46,7 @@ object Unified {
       LegacyPlan.requireWritableFormat("connection type", connType)
       steps.map { s =>
         // the step grammar is the legacy task-file step — reuse its parser
-        // by wrapping the single step as a task file
-        val asTask = JObject(List("steps" -> JArray(List(s))))
-        val task = LegacyPlan.parseTaskFile(
-          org.json4s.jackson.JsonMethods.compact(
-            org.json4s.jackson.JsonMethods.render(asTask))).head
+        val task = LegacyPlan.parseSteps(JObject(List("steps" -> JArray(List(s))))).head.task
         val stepName = task.name
         stepEntries(stepName) = arr(s \ "validations")
         // connection options (header, delimiter, compression...) ride into
@@ -92,7 +61,8 @@ object Unified {
           case _ => Map.empty[String, String]
         }
         val sink =
-          if (FileFormats.contains(connType))
+          // ONE format list for both dialects (LegacyPlan owns it)
+          if (LegacyPlan.FileFormats.contains(connType))
             connPath.map(p => SinkSpec(connType,
               if (steps.size == 1) p else s"$p/$stepName",
               options = (if (connType == "xml") Map("rowTag" -> stepName)
@@ -137,252 +107,118 @@ object Unified {
     (MultiPlanSpec(name, seed, tasks, fks), stepEntries.toMap)
   }
 
-  /** Generate, then validate each step's frame against its inline
-    * validations (gates awaited first). Runtime `config:` block honored
-    * (reference `UnifiedRuntimeConfig`):
-    *  - `config.flags.enableGenerateData: false` skips generation —
-    *    validations then read each step's SINK path (validate-existing
-    *    mode; a step without a file sink fails loudly);
-    *  - `config.flags.enableValidation: false` skips validations;
-    *  - `config.flags.enableSaveReports` + `config.folders.
-    *    generatedReportsFolderPath` write a per-run JSON report
-    *    (counts + validation results);
-    *  - `config.validation.numSampleErrorRecords` sizes error samples.
+  /** Lowers a unified config into one plan; its `config:` block (reference
+    * `UnifiedRuntimeConfig`) becomes behaviour of that plan:
+    *  - `flags.enableGenerateData: false` generates nothing: validations
+    *    read each step's SINK back (validate-existing mode);
+    *  - `flags.enableValidation: false` drops the validations;
+    *  - `flags.enableRecordTracking` tracks each sinked step's
+    *    `isPrimaryKey` fields under `folders.recordTrackingFolderPath`;
+    *    `enableDeleteGeneratedRecords` deletes those rows instead;
+    *  - `flags.enableGeneratePlanAndTasks`: a JDBC data source declaring NO
+    *    steps is discovered from its live catalog, at parse time (tables,
+    *    types, constraints, composite FKs → [[graft.sources.JdbcMetadata]]);
+    *    its tables become tasks whose sinks insert the generated rows back
+    *    into the database, parents first;
+    *  - `flags.enableSaveReports` + `folders.generatedReportsFolderPath`: a
+    *    per-run JSON report;
+    *  - `runtime.sparkConfig`: session confs for the run, restored after it;
+    *  - `validation.numSampleErrorRecords`: error samples per failed rule;
+    *  - `generation.numRecordsPerStep` overrides every step's count
+    *    (`numRecordsPerBatch` is accepted and ignored — Spark partitions
+    *    bound memory, batching is the reference's driver-loop artifact).
     * `enableFastGeneration` is accepted and ignored — generation here is
     * always the UDF-free projection path the reference's fast mode
     * approximates.
     */
-  def run(spark: SparkSession, text: String): UnifiedOutcome = {
-    val j = parseJ(text)
-    val numSamples = (j \ "config" \ "validation" \ "numSampleErrorRecords") match {
-      case JInt(i) => i.toInt; case _ => 5
-    }
-    import graft.util.Jsons.bool
-    def flag(name: String, default: Boolean): Boolean =
-      (j \ "config" \ "flags" \ name) match {
-        case JNothing => default
-        case v => bool(v, default)
-      }
-    // config.runtime.sparkConfig entries apply to the session (reference
-    // UnifiedSparkConfig); static/startup-only confs can't change on a
-    // live session — surface that clearly instead of a bare Spark error
-    (j \ "config" \ "runtime" \ "sparkConfig") match {
-      case JObject(confs) => confs.foreach { case (k, v) =>
-        graft.util.Jsons.str(v).foreach { value =>
-          try spark.conf.set(k, value)
-          catch {
-            case e: org.apache.spark.sql.AnalysisException =>
-              throw new IllegalArgumentException(
-                s"config.runtime.sparkConfig '$k' cannot be set on a running " +
-                  "session (static conf) — pass it at spark-submit time", e)
-          }
-        }
-      }
-      case _ => ()
+  def parse(j: JValue): MultiPlanSpec = {
+    import graft.util.Jsons.{bool, dbl}
+    val conf = j \ "config"
+    def flag(name: String, default: Boolean): Boolean = (conf \ "flags" \ name) match {
+      case JNothing => default
+      case v => bool(v, default)
     }
     val doGenerate = flag("enableGenerateData", default = true)
-    val doValidate = flag("enableValidation", default = true)
-    val doTrack = flag("enableRecordTracking", default = false)
     val doDelete = flag("enableDeleteGeneratedRecords", default = false)
-    val trackFolder = graft.util.Jsons.str(
-      j \ "config" \ "folders" \ "recordTrackingFolderPath")
-
-    val (plan0, entriesByStep) = parse(text)
-    // config.generation.numRecordsPerStep overrides every step's count
-    // (reference UnifiedGenerationConfig; numRecordsPerBatch is accepted
-    // and ignored — Spark partitions bound memory, batching is the
-    // reference's driver-loop artifact)
-    val perStep = graft.util.Jsons.dbl(
-      j \ "config" \ "generation" \ "numRecordsPerStep").map(_.toLong)
-    val planDeclared = perStep match {
-      case Some(n) => plan0.copy(tasks = plan0.tasks.map(_.copy(count = n)))
-      case None => plan0
-    }
-    // enableGeneratePlanAndTasks (reference metadata auto-mode): a JDBC
-    // data source declaring NO steps is discovered from its live catalog
-    // (tables, types, constraints, composite FKs → JdbcMetadata), its
-    // tasks+relationships merge into the plan, and generated rows INSERT
-    // back into the database after generation, parents first.
+    val (declared, entriesByStep) = declaredSteps(j)
+    val perStep = dbl(conf \ "generation" \ "numRecordsPerStep").map(_.toLong)
     val autoJdbc: Seq[(String, Seq[graft.sources.JdbcMetadata.DbTable])] =
       if (!flag("enableGeneratePlanAndTasks", default = false)) Nil
       else arr(j \ "dataSources").flatMap { ds =>
         val connType = str(ds \ "connection" \ "type").getOrElse("")
-        val url = str(ds \ "connection" \ "options" \ "url")
         if (Set("jdbc", "postgres", "mysql", "derby").contains(connType) &&
             arr(ds \ "steps").isEmpty) {
           // a step-less source under auto-mode with no url would silently
           // produce an empty "successful" run — fail loudly instead
-          val u = url.getOrElse(throw new IllegalArgumentException(
+          val u = str(ds \ "connection" \ "options" \ "url").getOrElse(throw new IllegalArgumentException(
             s"data source '${str(ds \ "name").getOrElse("?")}': " +
               "enableGeneratePlanAndTasks with no steps needs connection.options.url"))
           val pat = str(ds \ "connection" \ "options" \ "schema").getOrElse("%")
           Some(u -> graft.sources.JdbcMetadata.discover(u, pat))
         } else None
       }
-    val plan = autoJdbc.foldLeft(planDeclared) { case (p, (_, tables)) =>
-      val auto = graft.sources.JdbcMetadata.toPlan(
-        tables, p.name, rowsPerTable = perStep.getOrElse(1000L), seed = p.seed)
-      p.copy(tasks = p.tasks ++ auto.tasks,
-        relationships = p.relationships ++ auto.relationships)
+    val plan = autoJdbc.foldLeft(
+      declared.copy(tasks = declared.tasks.map(t => t.copy(count = perStep.getOrElse(t.count))))) {
+      case (p, (url, tables)) =>
+        val auto = graft.sources.JdbcMetadata.toPlan(
+          tables, p.name, rowsPerTable = perStep.getOrElse(1000L), seed = p.seed)
+        val qualified = tables.map(t => t.name -> t.qualified).toMap
+        p.copy(tasks = p.tasks ++ auto.tasks.map(t => t.copy(sink = Some(
+            SinkSpec("jdbc", qualified(t.name), "append", options = Map("url" -> url))))),
+          relationships = p.relationships ++ auto.relationships)
     }
-    val sinkByStep = plan.tasks.map(t => t.name -> t.sink).toMap
-    // per-step primary-key field names (options.isPrimaryKey) — the columns
-    // record tracking persists; a step without keys tracks all columns
-    val pkByStep: Map[String, Seq[String]] = arr(j \ "dataSources").flatMap { ds =>
-      arr(ds \ "steps").map { st =>
-        val pks = arr(st \ "fields").flatMap { f =>
-          if (graft.util.Jsons.bool(f \ "options" \ "isPrimaryKey"))
-            str(f \ "name") else None
-        }
-        str(st \ "name").getOrElse("step") -> pks
-      }
-    }.toMap
-    def requireTrackFolder(): String = trackFolder.getOrElse(
-      throw new IllegalArgumentException(
-        "record tracking needs config.folders.recordTrackingFolderPath"))
+    // the columns record tracking persists: a step's isPrimaryKey fields (a
+    // step without keys tracks all columns); an auto table's DISCOVERED
+    // primary keys — all-columns tracking would compare lossy-converted
+    // values (double vs DECIMAL rounded on insert) in the keyed DELETE and
+    // silently delete nothing
+    val keys = arr(j \ "dataSources").flatMap(ds => arr(ds \ "steps").map { st =>
+      str(st \ "name").getOrElse("step") -> arr(st \ "fields").flatMap(f =>
+        if (bool(f \ "options" \ "isPrimaryKey")) str(f \ "name") else None)
+    }).toMap ++ autoJdbc.flatMap(_._2.map(t => t.name -> t.columns.filter(_.isPk).map(_.name)))
+    val tracking =
+      if (!doDelete && !(doGenerate && flag("enableRecordTracking", default = false))) None
+      else Some(Tracking(str(conf \ "folders" \ "recordTrackingFolderPath").getOrElse(
+        throw new IllegalArgumentException(
+          "record tracking needs config.folders.recordTrackingFolderPath")), keys, doDelete))
 
-    def readBack(s: SinkSpec) = Sinks.readBack(spark, s)
-
-    // delete mode runs INSTEAD of generation (reference semantics): remove
-    // the previously tracked rows from each file sink (rewritten through
-    // the SAME Sinks.write conventions that produced the layout — single
-    // files stay single files) and from auto-discovered database tables
-    // (batched keyed DELETEs, children before parents), then drop tracking
-    if (doDelete) {
-      val folder = requireTrackFolder()
-      val fileDeleted = plan.tasks.flatMap { t =>
-        t.sink.flatMap { s =>
-          require(!s.options.get("unwrapTopLevelArray").contains("true"),
-            s"step '${t.name}': delete-generated-records cannot round-trip an " +
-              "unwrapTopLevelArray sink (written as a bare JSON array document)")
-          graft.generator.RecordTracking.deleteTrackedFromFiles(
-            spark, readBack(s), df => Sinks.write(df, s.copy(mode = "overwrite")),
-            folder, plan.name, t.name).map(t.name -> _)
-        }
-      }.toMap
-      val jdbcDeleted = autoJdbc.flatMap { case (url, tables) =>
-        val byName = tables.map(t => t.name -> t).toMap
-        // children first: reverse topological order over the discovered FKs
-        val order = graft.generator.ForeignKeys.deleteOrder(tables.map(_.name),
-          tables.flatMap(t => t.fks.filter(fk => byName.contains(fk.parentTable))
-            .map(fk => fk.parentTable -> t.name)))
-        order.flatMap { name =>
-          graft.generator.RecordTracking.deleteTrackedFromJdbc(
-            spark, url, byName(name).qualified, folder, plan.name, name)
-            .map(name -> _)
-        }
-      }.toMap
-      return UnifiedOutcome(plan.name,
-        MultiPlanRunner.MultiPlanOutcome(plan.name, plan.tasks.map(_.name),
-          Map.empty, Map.empty, Map.empty),
-        Nil, fileDeleted ++ jdbcDeleted)
-    }
-    // per-task write metrics for the run report (the reference's
-    // SparkRecordListener): counts what the writer tasks actually
-    // committed, off the scheduler bus — no extra job at any scale
-    val recListener = new graft.pipeline.RecordListener
-    spark.sparkContext.addSparkListener(recListener)
-    try {
-    val gen =
-      if (doGenerate) MultiPlanRunner.run(spark, plan)
-      else {
-        // same endpoint validation the generation path gets from
-        // MultiPlanRunner — a typo'd FK step must not surface as a bare
-        // key-not-found from inside the topological sort
-        val names = plan.tasks.map(_.name).toSet
-        plan.relationships.foreach(r =>
-          require(names.contains(r.childTable) && names.contains(r.parentTable),
-            s"relationship ${r.from} -> ${r.to} references an undeclared task"))
-        MultiPlanRunner.MultiPlanOutcome(plan.name,
-          graft.generator.ForeignKeys.insertOrder(plan.tasks.map(_.name),
-            plan.relationships.map(r => r.parentTable -> r.childTable)),
-          Map.empty, Map.empty, Map.empty)
-      }
-    val autoTableNames = autoJdbc.flatMap(_._2.map(_.name)).toSet
-    // auto tables track their DISCOVERED primary keys — all-columns
-    // tracking would compare lossy-converted values (double vs DECIMAL
-    // rounded on insert) in the keyed DELETE and silently delete nothing
-    val autoPkByStep: Map[String, Seq[String]] = autoJdbc.flatMap(_._2.map(t =>
-      t.name -> t.columns.filter(_.isPk).map(_.name))).toMap
-    if (doGenerate && doTrack) {
-      val folder = requireTrackFolder()
-      // only steps the delete run can actually clean are tracked: file
-      // sinks and auto-discovered database tables. Tracking a sink-less
-      // jdbc/kafka step would accumulate state with no cleanup path.
-      gen.insertOrder
-        .filter(step => sinkByStep.getOrElse(step, None).isDefined ||
-          autoTableNames.contains(step))
-        .foreach { step =>
-          val keys = pkByStep.getOrElse(step, Nil) match {
-            case Nil => autoPkByStep.getOrElse(step, Nil)
-            case ks => ks
-          }
-          gen.frames.get(step).foreach(df => graft.generator.RecordTracking.track(
-            df, keys, folder, plan.name, step))
-        }
-    }
-    // auto-discovered JDBC tables: insert the generated rows back into the
-    // database, in FK insert order (gen.insertOrder is already topological)
-    if (doGenerate) autoJdbc.foreach { case (url, tables) =>
-      val byName = tables.map(t => t.name -> t).toMap
-      gen.insertOrder.filter(byName.contains).foreach { name =>
-        graft.sources.Jdbc.write(gen.frames(name), url,
-          byName(name).qualified, org.apache.spark.sql.SaveMode.Append)
-      }
-    }
-    val validations = if (!doValidate) Nil else gen.insertOrder.flatMap { step =>
-      val entries = entriesByStep.getOrElse(step, Nil)
-      if (entries.isEmpty) None
-      else {
-        // generation off = validate-existing mode: the step's sink path IS
-        // the dataset location (the reference reads the data source back)
-        val frame = gen.frames.get(step).orElse(
-          sinkByStep.getOrElse(step, None).map { sk =>
+    // validate-existing mode: each validated step's sink path IS the
+    // dataset location (the reference reads the data source back)
+    val existing = !doGenerate && !doDelete
+    // a step's gated entries form one block of their own, so its ungated
+    // row rules can still be counted in the step's write
+    val validations = if (!flag("enableValidation", default = true)) Nil
+      else plan.tasks.flatMap { t =>
+        val (plain, gated) = entriesByStep.getOrElse(t.name, Nil)
+          .partition(e => (e \ "waitCondition") == JNothing)
+        Seq(plain, gated).filter(_.nonEmpty).map(t -> _)
+      }.map { case (t, entries) =>
+        ValidationDef(t.name, Nil, entries = entries.map(LegacyValidation.parseValidation),
+          waits = LegacyValidation.parseWaits(entries),
+          readBack = if (!existing) None else Some {
+            val sk = t.sink.getOrElse(throw new IllegalArgumentException(
+              s"step '${t.name}': enableGenerateData=false and no file sink to read " +
+                "existing data from — validations have no dataset"))
             // a bare-array document reads back as exploded element rows —
             // not the column shape the validations were written against
             require(!sk.options.get("unwrapTopLevelArray").contains("true"),
-              s"step '$step': validate-existing cannot read an " +
+              s"step '${t.name}': validate-existing cannot read an " +
                 "unwrapTopLevelArray sink back (bare JSON array document)")
-            readBack(sk)
+            sk
           })
-          .getOrElse(throw new IllegalArgumentException(
-            s"step '$step': enableGenerateData=false and no file sink to read " +
-              "existing data from — validations have no dataset"))
-        val waitMet = LegacyValidation.parseWaits(entries).forall(_.await(spark))
-        // ONE shared implementation of the preFilter denominator semantics
-        val results = LegacyValidation.validateEntries(
-          frame, entries.map(LegacyValidation.parseValidation),
-          numSamples = numSamples)
-        Some(StepValidation(step, results, waitMet))
       }
-    }
-    val outcome = UnifiedOutcome(plan.name, gen, validations)
-    // per-run report (reference enableSaveReports + generatedReportsFolderPath)
-    graft.util.Jsons.str(j \ "config" \ "folders" \ "generatedReportsFolderPath")
-      .filter(_ => flag("enableSaveReports", default = true))
-      .foreach(dir => writeReport(outcome, dir, recListener.settled()))
-    outcome
-    } finally spark.sparkContext.removeSparkListener(recListener)
-  }
-
-  private def writeReport(o: UnifiedOutcome, dir: String,
-      rec: graft.pipeline.RecordListener): Unit = {
-    import graft.util.Jsons.quote
-    val counts = o.generation.insertOrder.map(t =>
-      s"${quote(t)}:${o.generation.counts.getOrElse(t, 0L)}").mkString("{", ",", "}")
-    val vals = o.validations.flatMap(sv => sv.results.map(r =>
-      s"""{"step":${quote(sv.step)},"rule":${quote(r.rule)},"total":${r.total},""" +
-        s""""errors":${r.errors},"success":${r.success}}""")).mkString("[", ",", "]")
-    val json = s"""{"name":${quote(o.name)},"success":${o.success},""" +
-      s""""recordsWritten":${rec.recordsWritten},""" +
-      s""""recordsPerSec":${math.round(rec.recordsPerSec)},""" +
-      s""""writeTasks":${rec.tasks.size},""" +
-      s""""counts":$counts,"validations":$vals}"""
-    val d = java.nio.file.Paths.get(dir)
-    java.nio.file.Files.createDirectories(d)
-    // timestamped per run: successive runs (e.g. a validate-existing pass
-    // after a generation pass) must not clobber each other's record
-    java.nio.file.Files.writeString(
-      d.resolve(s"report_${o.name}_${System.currentTimeMillis()}.json"), json + "\n")
+    plan.copy(
+      tasks = if (existing) Nil else plan.tasks,
+      relationships = if (existing) Nil else plan.relationships,
+      validations = validations,
+      runtime = PlanRuntime(
+        sparkConf = (conf \ "runtime" \ "sparkConfig") match {
+          case JObject(confs) => confs.flatMap { case (k, v) => str(v).map(k -> _) }.toMap
+          case _ => Map.empty
+        },
+        numErrorSamples = dbl(conf \ "validation" \ "numSampleErrorRecords").fold(5)(_.toInt),
+        tracking = tracking,
+        reportFolder = str(conf \ "folders" \ "generatedReportsFolderPath")
+          .filter(_ => flag("enableSaveReports", default = true))))
   }
 }

@@ -42,19 +42,15 @@ object DataContract {
   }
 
   /** ODCS YAML (or JSON) → Contract via the same Jackson/json4s path as
-    * [[graft.plan.PlanRunner]]. Handles BOTH standard generations: v3's
+    * [[graft.plan.PlanSpec]]. Handles BOTH standard generations: v3's
     * `schema: [{properties: [...]}]` and v2's `dataset: [{table, columns:
     * [{column, logicalType, isNullable, isPrimaryKey, isUnique}]}]`
     * (the reference's odcs fixtures ship both).
     */
   def parse(text: String): Contract = {
     import org.json4s._
-    import org.json4s.jackson.JsonMethods
     implicit val formats: Formats = DefaultFormats
-    val json =
-      if (text.trim.startsWith("{")) text
-      else graft.plan.PlanRunner.yamlToJson(text)
-    val j = JsonMethods.parse(json)
+    val j = graft.util.Jsons.parse(text)
     (j \ "dataset") match {
       case JArray(tables) =>
         import graft.util.Jsons.{str, arr, bool}

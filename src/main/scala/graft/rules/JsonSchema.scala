@@ -2,7 +2,6 @@ package graft.rules
 
 import graft.generator._
 import org.json4s._
-import org.json4s.jackson.JsonMethods
 
 /** JSON-schema importer — the reference's jsonschema metadata source
   * (`core/generator/metadata/datasource/jsonschema/`: JsonSchemaConverter /
@@ -37,10 +36,7 @@ object JsonSchema {
   }
 
   def parse(text: String): Parsed = {
-    val json =
-      if (text.trim.startsWith("{")) text
-      else graft.plan.PlanRunner.yamlToJson(text)
-    Parsed(JsonMethods.parse(json))
+    Parsed(graft.util.Jsons.parse(text))
   }
 
   // ---------- pointer resolution / composition ----------

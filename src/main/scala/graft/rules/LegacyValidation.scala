@@ -82,13 +82,8 @@ object LegacyValidation {
       threshold: Double = 0.0): Seq[RuleResult] =
     validateEntries(df, sv.entries, threshold)
 
-  /** Validate parsed entries against one frame — THE single implementation
-    * of the preFilter denominator semantics, shared by the validation-file
-    * path ([[validate]]) and the unified-config path
-    * ([[graft.plan.Unified]]): plain rules in one projection over the whole
-    * frame; pre-filtered groups each in one projection over the FILTERED
-    * frame (fractional thresholds divide by the filtered count); dataset
-    * checks one bounded job each.
+  /** Validate parsed entries against one frame: plain rules in one
+    * projection over the whole frame, then [[filteredAndDatasetChecks]].
     */
   def validateEntries(df: DataFrame, entries: Seq[ParsedEntry],
       threshold: Double = 0.0, numSamples: Int = 5): Seq[RuleResult] = {
@@ -97,6 +92,19 @@ object LegacyValidation {
     val plain = entries.filter(_.preFilter.isEmpty).flatMap(_.rules)
     val row = if (plain.isEmpty) Nil
       else RuleEngine.validateAllWithSamples(df, plain, threshold, numSamples)
+    row ++ filteredAndDatasetChecks(df, entries, threshold, numSamples)
+  }
+
+  /** What an entry list validates beyond its plain row rules — THE single
+    * implementation of the preFilter denominator semantics, shared by the
+    * validation-file path ([[validate]]) and the plan runner
+    * ([[graft.plan.MultiPlanRunner.run]], which counts the plain rules in a
+    * sink write): pre-filtered groups each in one projection over the
+    * FILTERED frame (fractional thresholds divide by the filtered count);
+    * dataset checks one bounded job each.
+    */
+  def filteredAndDatasetChecks(df: DataFrame, entries: Seq[ParsedEntry],
+      threshold: Double, numSamples: Int): Seq[RuleResult] = {
     val pref = entries.filter(_.preFilter.isDefined)
       .groupBy(_.preFilter.get).toSeq.sortBy(_._1)
       .flatMap { case (pre, es) =>
@@ -108,7 +116,7 @@ object LegacyValidation {
       val ok = check(df)
       RuleResult(name, 1, if (ok) 0 else 1, ok)
     }
-    row ++ pref ++ ds
+    pref ++ ds
   }
 
   // ---------- per-entry parsing ----------

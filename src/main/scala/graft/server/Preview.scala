@@ -6,60 +6,33 @@ import org.apache.spark.sql.SparkSession
 /** Fast sample preview — the reference's `FastSampleGenerator.scala`
   * (~494 LoC: generate a handful of records from a submitted schema/plan so
   * the UI can show what the data will look like before committing to a full
-  * run). Same contract, no UI: accept either plan dialect, run a BOUNDED
-  * version of it (counts clamped, sinks stripped, source reads limited),
-  * return sample rows as JSON.
+  * run). Same contract, no UI: accept every plan dialect, run a BOUNDED
+  * version of it (counts clamped, sinks, gates and run side effects
+  * stripped, source reads limited), return sample rows as JSON.
   *
   * Bounding is structural, not post-hoc: a preview of a billion-row plan
   * generates `sampleN` rows per task — it never generates-then-limits. For
   * filter plans the source read is `limit(sampleN * 10)` BEFORE the
-  * pipeline (pushed to the scan), so preview cost is independent of source
-  * size.
+  * pipeline, so preview cost is independent of source size.
   */
 object Preview {
 
   final case class Sample(dataset: String, rows: Seq[String])
 
-  /** Dispatch on dialect: a document with `tasks` is a multi-task plan. */
+  /** Samples of every task of a plan in any dialect ([[Plans.parse]]). */
   def preview(spark: SparkSession, body: String, sampleN: Int = 10): Seq[Sample] = {
-    val json =
-      if (body.trim.startsWith("{")) body
-      else PlanRunner.yamlToJson(body)
-    if (org.json4s.jackson.JsonMethods.parse(json) \ "tasks" ne org.json4s.JNothing)
-      previewMulti(spark, MultiPlanRunner.parseJson(json), sampleN)
-    else previewFilter(spark, PlanRunner.parseJson(json), sampleN)
-  }
-
-  private def previewMulti(spark: SparkSession, plan: MultiPlanSpec, n: Int): Seq[Sample] = {
+    val plan = Plans.parse(body)
     val bounded = plan.copy(
-      tasks = plan.tasks.map(t => t.copy(count = math.min(t.count, n.toLong), sink = None)),
+      // a source task reads a LIMITED source: annotation must not scan the world
+      tasks = plan.tasks.map(t => t.copy(count = math.min(t.count, sampleN.toLong), sink = None,
+        read = t.read.map(_.copy(gate = None, limit = Some(sampleN * 10))))),
       // cardinality ratios would re-inflate the clamped counts — a preview
       // shows field shapes and FK wiring, not cardinality
-      relationships = plan.relationships.map(_.copy(ratio = None)))
+      relationships = plan.relationships.map(_.copy(ratio = None)),
+      validations = plan.validations.filter(_.readBack.isEmpty).map(_.copy(waits = Nil)),
+      // nothing tracked, deleted or reported
+      runtime = PlanRuntime(plan.runtime.sparkConf, plan.runtime.numErrorSamples))
     val outcome = MultiPlanRunner.run(spark, bounded)
-    outcome.insertOrder.map { t =>
-      Sample(t, outcome.frames(t).limit(n).toJSON.collect().toSeq)
-    }
-  }
-
-  private def previewFilter(spark: SparkSession, plan: PlanSpec, n: Int): Seq[Sample] = {
-    val bounded = plan.copy(sink = None, waitFor = None)
-    // limit the SOURCE, not the output: annotation must not scan the world
-    val src = plan.source
-    val df = (src.format match {
-      case "table" => spark.read.table(src.path)
-      case fmt => spark.read.format(fmt).load(src.path)
-    }).limit(n * 10)
-    val tmpPath = java.nio.file.Files.createTempDirectory("graft_preview")
-    try {
-      df.write.mode("overwrite").parquet(tmpPath.toString)
-      val outcome = PlanRunner.run(spark,
-        bounded.copy(source = SourceSpec("parquet", tmpPath.toString)))
-      // collect BEFORE the temp copy is deleted — the frame's scan reads it
-      Seq(Sample(plan.name, outcome.output.limit(n).toJSON.collect().toSeq))
-    } finally {
-      // a long-lived REST server must not accumulate one /tmp dir per call
-      graft.util.Fs.deleteRecursively(tmpPath)
-    }
+    outcome.insertOrder.map(t => Sample(t, outcome.frames(t).limit(sampleN).toJSON.collect().toSeq))
   }
 }

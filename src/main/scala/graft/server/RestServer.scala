@@ -1,6 +1,8 @@
 package graft.server
 
-import graft.plan.PlanRunner
+import graft.plan.{MultiPlanRunner, Plans}
+import graft.plan.MultiPlanRunner.MultiPlanOutcome
+import graft.util.Jsons.{escape => esc}
 import org.apache.spark.sql.SparkSession
 import java.nio.charset.StandardCharsets.UTF_8
 
@@ -11,16 +13,18 @@ import java.nio.charset.StandardCharsets.UTF_8
   *
   *   GET  /        the plan-builder page ([[Ui]] — edit/save/load/preview/
   *                 run/history over these endpoints, one static document)
-  *   POST /plan    body = PlanSpec JSON or YAML → executes via PlanRunner,
-  *                 responds with rows_in/rows_out + per-rule validation
-  *                 results (400 on parse errors, 500 on execution errors)
+  *   POST /plan    body = a plan of any dialect, JSON or YAML
+  *                 ([[Plans.parse]]) → executes via MultiPlanRunner,
+  *                 responds with per-task counts (a filter plan's
+  *                 rows_in/rows_out) + per-rule validation results (400 on
+  *                 parse errors, 500 on execution errors)
   *   GET  /health  liveness
   *
   * Plus the repository surface (reference `core/ui/plan/PlanRepository
   * .scala`: save/get/list/remove + run history) backed by [[PlanStore]],
   * and fast sample preview (`FastSampleGenerator.scala`) via [[Preview]]:
   *
-  *   PUT    /plans/{name}      save plan text (either dialect)
+  *   PUT    /plans/{name}      save plan text (any dialect)
   *   GET    /plans             list saved plan names
   *   GET    /plans/{name}      fetch plan text
   *   DELETE /plans/{name}      remove
@@ -31,8 +35,9 @@ import java.nio.charset.StandardCharsets.UTF_8
   *                             reads limited — see [[Preview]])
   *
   * With this, all three reference entry shapes exist: the Scala case-class
-  * API ([[graft.plan.PlanSpec]]), YAML/JSON plan files
-  * ([[PlanRunner.parseYaml]], `graft.Main --plan`), and REST submission.
+  * API ([[graft.plan.MultiPlanSpec]]), YAML/JSON plan files
+  * ([[Plans.parse]], `graft.Main --plan`), and REST submission — every one
+  * accepting the same dialects.
   */
 final class RestServer(spark: SparkSession, port: Int = 0,
     repoDir: Option[String] = None) {
@@ -53,13 +58,19 @@ final class RestServer(spark: SparkSession, port: Int = 0,
     ex.close()
   }
 
-  private def esc(s: String): String =
-    s.flatMap {
-      case '"' => "\\\""
-      case '\\' => "\\\\"
-      case c if c < ' ' => f"\\u${c.toInt}%04x"
-      case c => c.toString
-    }
+  /** An outcome as the response body: per-task counts (a filter plan's one
+    * source adds rows_in/rows_out) and every rule's result per dataset. */
+  private def outcomeJson(o: MultiPlanOutcome, runId: Option[String] = None): String = {
+    val counts = o.insertOrder.map(t => s""""${esc(t)}":${o.counts.getOrElse(t, -1L)}""")
+      .mkString("{", ",", "}")
+    val rows = o.rowsRead.headOption.fold("") { case (t, n) =>
+      s""""rows_in":$n,"rows_out":${o.counts(t)},""" }
+    val vs = o.validations.toSeq.sortBy(_._1).flatMap { case (ds, rs) => rs.map(v =>
+      s"""{"dataset":"${esc(ds)}","rule":"${esc(v.rule)}","total":${v.total},""" +
+        s""""errors":${v.errors},"success":${v.success}}""") }.mkString("[", ",", "]")
+    s"""{"plan":"${esc(o.plan)}",${runId.fold("")(r => s""""run_id":"$r",""")}""" +
+      s""""success":${o.success},"counts":$counts,$rows"validations":$vs}"""
+  }
 
   def start(): RestServer = {
     server.createContext("/", (ex: com.sun.net.httpserver.HttpExchange) => {
@@ -79,23 +90,13 @@ final class RestServer(spark: SparkSession, port: Int = 0,
       if (ex.getRequestMethod != "POST") respond(ex, 405, """{"error":"POST only"}""")
       else {
         val body = new String(ex.getRequestBody.readAllBytes(), UTF_8)
-        val parsed =
-          try Right(if (body.trim.startsWith("{")) PlanRunner.parseJson(body)
-                    else PlanRunner.parseYaml(body))
-          catch { case e: Exception => Left(e) }
+        val parsed = try Right(Plans.parse(body)) catch { case e: Exception => Left(e) }
         parsed match {
           case Left(e) =>
             respond(ex, 400, s"""{"error":"invalid plan: ${esc(String.valueOf(e.getMessage))}"}""")
           case Right(plan) =>
-            try {
-              val o = PlanRunner.run(spark, plan)
-              val vs = o.validations.map(v =>
-                s"""{"rule":"${esc(v.rule)}","total":${v.total},"errors":${v.errors},"success":${v.success}}""")
-                .mkString("[", ",", "]")
-              respond(ex, 200,
-                s"""{"plan":"${esc(o.plan)}","rows_in":${o.rowsIn},"rows_out":${o.rowsOut},""" +
-                  s""""success":${o.success},"validations":$vs}""")
-            } catch {
+            try respond(ex, 200, outcomeJson(MultiPlanRunner.run(spark, plan)))
+            catch {
               case e: Exception =>
                 respond(ex, 500, s"""{"error":"${esc(String.valueOf(e.getMessage))}"}""")
             }
@@ -123,28 +124,10 @@ final class RestServer(spark: SparkSession, port: Int = 0,
             case Some(text) =>
               val runId = java.util.UUID.randomUUID().toString
               try {
-                // dialect dispatch, same rule as Preview: `tasks` = multi
-                val json = if (text.trim.startsWith("{")) text
-                           else PlanRunner.yamlToJson(text)
-                val isMulti =
-                  (org.json4s.jackson.JsonMethods.parse(json) \ "tasks") !=
-                    org.json4s.JNothing
-                val (planName, success, detail) =
-                  if (isMulti) {
-                    val o = graft.plan.MultiPlanRunner.run(
-                      spark, graft.plan.MultiPlanRunner.parseJson(json))
-                    val counts = o.insertOrder.map(t =>
-                      s""""${esc(t)}":${o.counts(t)}""").mkString("{", ",", "}")
-                    (o.plan, o.success, s""""counts":$counts""")
-                  } else {
-                    val o = PlanRunner.run(spark, PlanRunner.parseJson(json))
-                    (o.plan, o.success,
-                      s""""rows_in":${o.rowsIn},"rows_out":${o.rowsOut}""")
-                  }
-                store.recordRun(name, runId, if (success) "success" else "failed",
+                val o = MultiPlanRunner.run(spark, Plans.parse(text))
+                store.recordRun(name, runId, if (o.success) "success" else "failed",
                   System.currentTimeMillis())
-                respond(ex, 200,
-                  s"""{"plan":"${esc(planName)}","run_id":"$runId","success":$success,$detail}""")
+                respond(ex, 200, outcomeJson(o, Some(runId)))
               } catch {
                 case e: Exception =>
                   store.recordRun(name, runId, "error",

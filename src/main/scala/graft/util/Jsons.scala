@@ -12,8 +12,14 @@ object Jsons {
   /** Parse JSON, or YAML via the shared Jackson YAML bridge. */
   def parse(text: String): JValue =
     org.json4s.jackson.JsonMethods.parse(
-      if (text.trim.startsWith("{")) text
-      else graft.plan.PlanRunner.yamlToJson(text))
+      if (text.trim.startsWith("{")) text else yamlToJson(text))
+
+  /** YAML → JSON via Jackson's YAML module — shared by every YAML-accepting
+    * surface (plans, data contracts, REST bodies). */
+  def yamlToJson(s: String): String = {
+    val yaml = new com.fasterxml.jackson.dataformat.yaml.YAMLMapper()
+    new com.fasterxml.jackson.databind.ObjectMapper().writeValueAsString(yaml.readTree(s))
+  }
 
   def str(j: JValue): Option[String] = j match {
     case JString(s) => Some(s)

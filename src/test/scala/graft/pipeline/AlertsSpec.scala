@@ -1,7 +1,7 @@
 package graft.pipeline
 
 import graft.SparkSuite
-import graft.plan.{MultiPlanRunner, PlanRunner}
+import graft.plan.{MultiPlanRunner, PlanSpec}
 import java.nio.file.Files
 
 class AlertsSpec extends SparkSuite {
@@ -22,12 +22,12 @@ class AlertsSpec extends SparkSuite {
     finally server.stop(0)
   }
 
-  private def runPlan(passes: Boolean): PlanRunner.PlanOutcome = {
+  private def runPlan(passes: Boolean): MultiPlanRunner.MultiPlanOutcome = {
     val in = Files.createTempDirectory("graft_alert_in").toString
     Seq((1L, "hello"), (2L, "ok")).toDF("id", "text").write.mode("overwrite").parquet(in)
     val expr = if (passes) "id > 0" else "id > 99"
-    PlanRunner.run(s, PlanRunner.parseJson(
-      s"""{"name":"p","source":{"path":"$in"},"rules":[{"name":"r1","expr":"$expr"}]}"""))
+    MultiPlanRunner.run(s, PlanSpec.parse(
+      s"""{"name":"p","source":{"path":"$in"},"rules":[{"name":"r1","expr":"$expr"}]}""").lower)
   }
 
   test("trigger matrix + payload: failure-triggered alert fires only on failure") {

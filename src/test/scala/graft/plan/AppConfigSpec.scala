@@ -164,11 +164,11 @@ class AppConfigSpec extends SparkSuite {
          |      - name: "account_id"
          |        options: {regex: "ACC[0-9]{4}"}
          |""".stripMargin
-    val o = LegacyPlan.runFolder(s, planYaml,
+    val o = MultiPlanRunner.run(s, Plans.parse(planYaml, Some(TaskFolders(
       { val d = java.nio.file.Files.createTempDirectory("tasks")
         java.nio.file.Files.writeString(d.resolve("t1.yaml"), taskYaml); d.toString },
-      validationFolder = None, generate = false)
-    assert(o.generation.insertOrder.isEmpty && o.generation.counts.isEmpty)
+      validationFolder = None, generate = false))))
+    assert(o.insertOrder.isEmpty && o.counts.isEmpty)
     assert(!java.nio.file.Files.exists(java.nio.file.Paths.get(s"$dir/out")),
       "no sink written when generation disabled")
   }

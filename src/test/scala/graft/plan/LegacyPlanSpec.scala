@@ -314,16 +314,17 @@ class LegacyPlanSpec extends SparkSuite {
     // must use it (the shared fixture's explicit-map tests may diverge)
     val planWithVal = (planYaml + "validations:\n  - \"balance_checks\"\n")
       .replace("\"parquet_transactions\"", "\"parquet_balance_and_transactions\"")
-    val o = LegacyPlan.runFolder(s, planWithVal, taskDir.toString, Some(valDir.toString))
-    assert(o.generation.insertOrder == Seq("balances", "transactions"))
-    assert(o.generation.counts("transactions") == 2000L)
+    val o = MultiPlanRunner.run(s,
+      Plans.parse(planWithVal, Some(TaskFolders(taskDir.toString, Some(valDir.toString)))))
+    assert(o.insertOrder == Seq("balances", "transactions"))
+    assert(o.counts("transactions") == 2000L)
     // the validation ran against the SINK path the task wrote
     assert(o.validations.size == 1 && o.validations.head._1 == "parquet")
     assert(o.success, o.validations.toString)
     // a plan referencing a task with no matching file fails loudly
     val e = intercept[IllegalArgumentException](
-      LegacyPlan.runFolder(s, planYaml.replace("parquet_transactions", "ghost_task"),
-        taskDir.toString))
+      Plans.parse(planYaml.replace("parquet_transactions", "ghost_task"),
+        Some(TaskFolders(taskDir.toString))))
     assert(e.getMessage.contains("no task file supplied for 'ghost_task'"))
   }
 

@@ -158,6 +158,17 @@ class ObservedValidationSpec extends SparkSuite {
     n.get
   }
 
+  /** A run with passing validations launches no more jobs than the same
+    * plan without them: the rules ride on the sink writes. */
+  private def assertNoExtraJobs(validated: MultiPlanSpec, bare: MultiPlanSpec, rules: Int): Unit = {
+    MultiPlanRunner.run(s, validated) // warm
+    var outcome: MultiPlanRunner.MultiPlanOutcome = null
+    val jobs = jobsOf { outcome = MultiPlanRunner.run(s, validated) }
+    assert(outcome.success && outcome.validations.values.flatten.size == rules)
+    val bareJobs = jobsOf { MultiPlanRunner.run(s, bare) }
+    assert(jobs <= bareJobs, s"${validated.name}: validated run launched $jobs jobs, bare run $bareJobs")
+  }
+
   test("plan invariant: passing validations launch no more jobs than no validations") {
     val passing =
       """validations:
@@ -170,12 +181,39 @@ class ObservedValidationSpec extends SparkSuite {
         |      - {name: qty_positive, expr: "qty >= 1"}
         |""".stripMargin
     val plan = MultiPlanRunner.parseYaml(planYaml(tmp("graft_obs_jobs"), passing))
-    MultiPlanRunner.run(s, plan) // warm
-    var outcome: MultiPlanRunner.MultiPlanOutcome = null
-    val validated = jobsOf { outcome = MultiPlanRunner.run(s, plan) }
-    assert(outcome.success && outcome.validations.values.flatten.size == 3)
-    val bare = jobsOf { MultiPlanRunner.run(s, plan.copy(validations = Nil)) }
-    assert(validated <= bare, s"validated run launched $validated jobs, bare run $bare")
+    assertNoExtraJobs(plan, plan.copy(validations = Nil), 3)
+
+    // a unified config whose file-sinked step carries inline row validations
+    def unified(out: String, validations: String): MultiPlanSpec = Plans.parse(
+      s"""version: "1.0"
+         |name: "observed_unified"
+         |dataSources:
+         |  - name: "customer_files"
+         |    connection: {type: "parquet", options: {path: "$out/customers"}}
+         |    steps:
+         |      - name: "customers"
+         |        count: {records: 300}
+         |        fields:
+         |          - {name: "customer_id", options: {regex: "CUST[0-9]{8}"}}
+         |          - {name: "age", type: "integer", options: {min: 18, max: 90}}
+         |$validations""".stripMargin)
+    val out = tmp("graft_obs_unified")
+    assertNoExtraJobs(unified(out,
+      """        validations:
+        |          - expr: "age >= 18 AND age <= 90"
+        |          - field: "customer_id"
+        |            validation:
+        |              - {type: "null", negate: true}
+        |""".stripMargin), unified(out, ""), 2)
+
+    // a filter plan with rules and a sink
+    val in = tmp("graft_obs_filter_in")
+    s.range(200).selectExpr("id", "concat('caption ', id) AS text").write.mode("overwrite").parquet(in)
+    val filter = PlanSpec.parse(
+      s"""{"name": "observed_filter", "source": {"path": "$in"},
+         | "rules": [{"name": "id_ok", "expr": "id >= 0"}, {"name": "text_ok", "expr": "length(text) > 3"}],
+         | "scrubFields": ["text"], "sink": {"path": "${tmp("graft_obs_filter_out")}/out"}}""".stripMargin)
+    assertNoExtraJobs(filter.lower, filter.copy(rules = Nil).lower, 2)
   }
 
   test("an ignore sink over a new target counts in the write's own pass") {

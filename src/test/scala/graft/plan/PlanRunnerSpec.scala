@@ -7,6 +7,9 @@ import java.nio.file.Files
 class PlanRunnerSpec extends SparkSuite {
   import graft.SharedSpark.spark.implicits._
 
+  /** A filter plan runs as its one source task. */
+  private def run(plan: PlanSpec) = MultiPlanRunner.run(spark, plan.lower)
+
   private def writeInput(): String = {
     val dir = Files.createTempDirectory("graft_plan_in").toString
     Seq(
@@ -35,14 +38,14 @@ class PlanRunnerSpec extends SparkSuite {
          |  "keepOnly": true,
          |  "sink": {"path": "$out"}
          |}""".stripMargin
-    val plan = PlanRunner.parseJson(json)
+    val plan = PlanSpec.parse(json)
     assert(plan.name == "doc_quality" && plan.rules.size == 2 && plan.keepOnly)
     assert(plan.source.format == "parquet") // default applied
 
-    val outcome = PlanRunner.run(spark, plan)
-    assert(outcome.rowsIn == 4 && outcome.rowsOut == 2)
+    val outcome = run(plan)
+    assert(outcome.rowsRead("doc_quality") == 4 && outcome.counts("doc_quality") == 2)
     assert(!outcome.success) // both rules have violations
-    val v = outcome.validations.map(r => r.rule -> r).toMap
+    val v = outcome.validations("doc_quality").map(r => r.rule -> r).toMap
     assert(v("text_long_enough").errors == 1 && v("age_valid").errors == 1)
     assert(v("age_valid").samples.head("id") == 4L)
 
@@ -68,22 +71,23 @@ class PlanRunnerSpec extends SparkSuite {
          |  path: $out
          |  partitionBy: [lang]
          |""".stripMargin
-    val plan = PlanRunner.parseYaml(yaml)
+    val plan = PlanSpec.parse(yaml)
     assert(plan.qualityFilter && plan.sink.get.partitionBy == Seq("lang"))
-    val outcome = PlanRunner.run(spark, plan)
-    assert(outcome.rowsIn == 500)
-    assert(outcome.rowsOut > 0 && outcome.rowsOut < 500)
+    val outcome = run(plan)
+    val rowsOut = outcome.counts("image_filter")
+    assert(outcome.rowsRead("image_filter") == 500)
+    assert(rowsOut > 0 && rowsOut < 500)
     val written = spark.read.parquet(out)
-    assert(written.count() == outcome.rowsOut)
+    assert(written.count() == rowsOut)
     assert(written.where(!col("keep")).count() == 0)
   }
 
   test("plan without sink or rules still runs (pure annotation)") {
     val in = writeInput()
-    val plan = PlanRunner.parseJson(s"""{"name": "noop", "source": {"path": "$in"}}""")
-    val outcome = PlanRunner.run(spark, plan)
-    assert(outcome.rowsIn == -1 && outcome.validations.isEmpty)
-    assert(outcome.output.count() == 4)
+    val plan = PlanSpec.parse(s"""{"name": "noop", "source": {"path": "$in"}}""")
+    val outcome = run(plan)
+    assert(outcome.rowsRead("noop") == -1 && outcome.validations.isEmpty)
+    assert(outcome.frames("noop").count() == 4)
   }
 
   test("sink conveniences: single-FILE paths and the partitions option") {
@@ -174,14 +178,14 @@ class PlanRunnerSpec extends SparkSuite {
     spark.range(100).selectExpr("id", "id % 4 AS v").write.mode("overwrite").parquet(in)
     val root = Files.createTempDirectory("graft_plan_ignore_out").toString
     Seq(s"$root/x.parquet", s"$root/x").foreach { path =>
-      val plan = PlanRunner.parseJson(
+      val plan = PlanSpec.parse(
         s"""{"name": "ign", "source": {"path": "$in"},
            | "rules": [{"name": "v_small", "expr": "v < 3"}], "keepOnly": true,
            | "sink": {"path": "$path", "mode": "ignore"}}""".stripMargin)
       // the second run finds the target in place and writes nothing
       (1 to 2).foreach { i =>
-        val o = Await.result(Future(PlanRunner.run(spark, plan)), 120.seconds)
-        assert((o.rowsIn, o.rowsOut) == ((100L, 75L)), s"$path run $i")
+        val o = Await.result(Future(run(plan)), 120.seconds)
+        assert((o.rowsRead("ign"), o.counts("ign")) == ((100L, 75L)), s"$path run $i")
       }
       assert(spark.read.parquet(path).count() == 75)
     }

@@ -11,6 +11,8 @@ import java.nio.file.Files
 class UnifiedSpec extends SparkSuite {
   private val s = graft.SharedSpark.spark
 
+  private def run(yaml: String) = MultiPlanRunner.run(s, Plans.parse(yaml))
+
   private def unifiedYaml(out: String): String =
     s"""version: "1.0"
        |name: "validation_example"
@@ -95,21 +97,22 @@ class UnifiedSpec extends SparkSuite {
   test("unified config: detect, generate, FK cardinality, inline validations, sinks") {
     val out = Files.createTempDirectory("graft_unified").toString
     val yaml = unifiedYaml(out)
-    assert(Unified.detect(yaml))
-    assert(!Unified.detect("name: x\ntasks: []\n")) // legacy plan ≠ unified
+    def dialect(text: String) = Plans.dialect(graft.util.Jsons.parse(text))
+    assert(dialect(yaml) == Plans.UnifiedConfig)
+    assert(dialect("name: x\ntasks: []\n") != Plans.UnifiedConfig) // legacy plan ≠ unified
 
-    val o = Unified.run(s, yaml)
-    assert(o.name == "validation_example")
-    assert(o.generation.insertOrder == Seq("customers", "orders"))
+    val o = run(yaml)
+    assert(o.plan == "validation_example")
+    assert(o.insertOrder == Seq("customers", "orders"))
     // FK cardinality from the unified foreignKeys block: 300 × 2
-    assert(o.generation.counts("orders") == 600L)
+    assert(o.counts("orders") == 600L)
 
     // inline validations all green (expr, field, groupBy, names, waited expr)
-    assert(o.success, o.validations.flatMap(_.results).filterNot(_.success).map(_.rule).toString)
-    val v = o.validations.find(_.step == "customers").get
-    assert(v.waitMet)
-    assert(v.results.exists(_.rule.startsWith("groupby_status_avg")))
-    assert(v.results.exists(_.rule.startsWith("fieldNames_")))
+    assert(o.success, o.validations.values.flatten.filterNot(_.success).map(_.rule).toString)
+    val results = o.validations("customers")
+    assert(o.waits("customers"))
+    assert(results.exists(_.rule.startsWith("groupby_status_avg")))
+    assert(results.exists(_.rule.startsWith("fieldNames_")))
 
     // sinks at connection path; referential integrity on disk
     val customers = s.read.parquet(s"$out/customers")
@@ -123,9 +126,9 @@ class UnifiedSpec extends SparkSuite {
     val out = Files.createTempDirectory("graft_unified2").toString
     val yaml = unifiedYaml(out)
       .replace("\"age >= 18 AND age <= 120\"", "\"age >= 119\"")
-    val o = Unified.run(s, yaml)
+    val o = run(yaml)
     assert(!o.success)
-    val failed = o.validations.flatMap(_.results).filterNot(_.success)
+    val failed = o.validations.values.flatten.filterNot(_.success)
     assert(failed.nonEmpty && failed.head.samples.size <= 3) // numSampleErrorRecords honored
   }
 
@@ -137,7 +140,7 @@ class UnifiedSpec extends SparkSuite {
       s"config:\n$extra\n  validation:")
 
     // pass 1: generate with reports enabled → data on disk + a report file
-    val o1 = Unified.run(s, withConfig(
+    val o1 = run(withConfig(
       s"""  flags:
          |    enableGenerateData: true
          |    enableSaveReports: true
@@ -162,29 +165,40 @@ class UnifiedSpec extends SparkSuite {
     // pass 2: enableGenerateData=false → validations run against the SINK
     // paths written by pass 1 (validate-existing mode), nothing regenerated
     val before = s.read.parquet(s"$out/customers").count()
-    val o2 = Unified.run(s, withConfig(
+    val o2 = run(withConfig(
       "  flags:\n    enableGenerateData: false"))
-    assert(o2.generation.frames.isEmpty) // nothing generated
+    assert(o2.frames.isEmpty) // nothing generated
     assert(o2.validations.nonEmpty && o2.success,
-      o2.validations.flatMap(_.results).filterNot(_.success).map(_.rule).toString)
+      o2.validations.values.flatten.filterNot(_.success).map(_.rule).toString)
     assert(s.read.parquet(s"$out/customers").count() == before)
 
     // enableValidation=false → generation only, zero validation results
-    val o3 = Unified.run(s, withConfig(
+    val o3 = run(withConfig(
       "  flags:\n    enableValidation: false"))
-    assert(o3.validations.isEmpty && o3.generation.counts("customers") == 300L)
+    assert(o3.validations.isEmpty && o3.counts("customers") == 300L)
 
-    // config.runtime.sparkConfig applies runtime confs; static confs get a
-    // clear error, not a bare Spark AnalysisException
-    val prev = s.conf.get("spark.sql.shuffle.partitions")
+    // config.runtime.sparkConfig applies runtime confs to the run's own jobs
+    // and restores the session afterwards (a long-lived REST session must
+    // not keep one request's confs); static confs get a clear error, not a
+    // bare Spark AnalysisException
+    val key = "spark.sql.shuffle.partitions"
+    val prev = s.conf.get(key)
+    val seen = java.util.concurrent.ConcurrentHashMap.newKeySet[String]()
+    val l = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(e: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+        Option(e.properties).flatMap(p => Option(p.getProperty(key))).foreach(seen.add)
+    }
+    s.sparkContext.addSparkListener(l)
     try {
-      Unified.run(s, withConfig(
-        "  runtime:\n    sparkConfig:\n      spark.sql.shuffle.partitions: \"24\""))
-      assert(s.conf.get("spark.sql.shuffle.partitions") == "24")
-    } finally s.conf.set("spark.sql.shuffle.partitions", prev)
-    val e = intercept[IllegalArgumentException](Unified.run(s, withConfig(
+      run(withConfig("  runtime:\n    sparkConfig:\n      spark.sql.shuffle.partitions: \"24\""))
+      org.apache.spark.ListenerBusDrain(s.sparkContext)
+    } finally s.sparkContext.removeSparkListener(l)
+    assert(seen.contains("24"), seen.toString)
+    assert(s.conf.get(key) == prev)
+    val e = intercept[IllegalArgumentException](run(withConfig(
       "  runtime:\n    sparkConfig:\n      spark.sql.warehouse.dir: \"/tmp/x\"")))
     assert(e.getMessage.contains("spark-submit"))
+    assert(s.conf.get(key) == prev)
   }
 
   test("record tracking + delete-generated-records lifecycle") {
@@ -203,7 +217,7 @@ class UnifiedSpec extends SparkSuite {
            |    recordTrackingFolderPath: "$trackDir"
            |  validation:""".stripMargin)
 
-    val o1 = Unified.run(s, yaml("    enableRecordTracking: true"))
+    val o1 = run(yaml("    enableRecordTracking: true"))
     assert(o1.success)
     val tracked = s.read.parquet(s"$trackDir/validation_example/customers")
     assert(tracked.columns.toSeq == Seq("customer_id")) // PK columns only
@@ -215,7 +229,7 @@ class UnifiedSpec extends SparkSuite {
       .toDF("customer_id", "email", "age", "account_balance", "status")
       .write.mode("append").parquet(s"$out/customers")
 
-    val o2 = Unified.run(s, yaml("    enableDeleteGeneratedRecords: true"))
+    val o2 = run(yaml("    enableDeleteGeneratedRecords: true"))
     assert(o2.deleted.contains("customers"))
     val (before, after) = o2.deleted("customers")
     assert(before == 301 && after == 1, s"$before -> $after")
@@ -225,7 +239,7 @@ class UnifiedSpec extends SparkSuite {
     // tracking state cleaned; a second delete run is a no-op
     assert(!java.nio.file.Files.exists(
       java.nio.file.Paths.get(s"$trackDir/validation_example/customers")))
-    val o3 = Unified.run(s, yaml("    enableDeleteGeneratedRecords: true"))
+    val o3 = run(yaml("    enableDeleteGeneratedRecords: true"))
     assert(o3.deleted.isEmpty)
   }
 
@@ -270,10 +284,10 @@ class UnifiedSpec extends SparkSuite {
          |        url: "$url"
          |        schema: "APP"
          |""".stripMargin
-    val o = Unified.run(s, yaml("    enableRecordTracking: true"))
+    val o = run(yaml("    enableRecordTracking: true"))
     // discovered tasks generated in FK order and landed in the DATABASE
-    assert(o.generation.insertOrder == Seq("TEAMS", "PLAYERS"))
-    assert(o.generation.counts.values.forall(_ == 40L)) // numRecordsPerStep
+    assert(o.insertOrder == Seq("TEAMS", "PLAYERS"))
+    assert(o.counts.values.forall(_ == 40L)) // numRecordsPerStep
     val teams = graft.sources.Jdbc.read(s, url, "APP.TEAMS")
     val players = graft.sources.Jdbc.read(s, url, "APP.PLAYERS")
     assert(teams.count() == 40 && players.count() == 40)
@@ -290,13 +304,13 @@ class UnifiedSpec extends SparkSuite {
       } finally conn.close()
     }
     // delete mode removes exactly the tracked rows, children before parents
-    val od = Unified.run(s, yaml("    enableDeleteGeneratedRecords: true"))
+    val od = run(yaml("    enableDeleteGeneratedRecords: true"))
     assert(od.deleted.keySet == Set("TEAMS", "PLAYERS"))
     val teamsAfter = graft.sources.Jdbc.read(s, url, "APP.TEAMS")
     assert(teamsAfter.count() == 1)
     assert(teamsAfter.head().getAs[Int]("TEAM_ID") == 999999)
     assert(graft.sources.Jdbc.read(s, url, "APP.PLAYERS").isEmpty)
     // tracking state cleared → second delete run is a no-op
-    assert(Unified.run(s, yaml("    enableDeleteGeneratedRecords: true")).deleted.isEmpty)
+    assert(run(yaml("    enableDeleteGeneratedRecords: true")).deleted.isEmpty)
   }
 }

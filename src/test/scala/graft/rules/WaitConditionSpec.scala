@@ -71,7 +71,7 @@ class WaitConditionSpec extends SparkSuite {
   }
 
   test("plan-level gate: dataExists wait wired through PlanRunner YAML") {
-    import graft.plan.PlanRunner
+    import graft.plan.{MultiPlanRunner, Plans}
     val in = Files.createTempDirectory("graft_wait_plan").toString + "/in"
     Seq((1L, "good caption text"), (2L, "x")).toDF("id", "text").write.parquet(in)
     val yaml =
@@ -81,12 +81,12 @@ class WaitConditionSpec extends SparkSuite {
          |rules:
          |  - {name: len, expr: "length(text) > 3"}
          |""".stripMargin
-    val outcome = PlanRunner.run(spark, PlanRunner.parseYaml(yaml))
-    assert(outcome.waitMet.contains(true))
+    val outcome = MultiPlanRunner.run(spark, Plans.parse(yaml))
+    assert(outcome.waits.get("gated").contains(true))
     // exhausted gate: plan still runs (reference semantics) but success=false
     val yamlBad = yaml.replace("id = 1", "id = 999")
-    val bad = PlanRunner.run(spark, PlanRunner.parseYaml(yamlBad))
-    assert(bad.waitMet.contains(false) && !bad.success)
+    val bad = MultiPlanRunner.run(spark, Plans.parse(yamlBad))
+    assert(bad.waits.get("gated").contains(false) && !bad.success)
     assert(bad.validations.nonEmpty) // validations DID run after the gate
   }
 }

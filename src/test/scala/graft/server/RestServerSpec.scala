@@ -107,6 +107,49 @@ class RestServerSpec extends SparkSuite {
     } finally srv.stop()
   }
 
+  test("a saved unified config runs and previews through the same front door") {
+    val out = Files.createTempDirectory("graft_rest_unified").toString
+    val unified =
+      s"""version: "1.0"
+         |name: "u_rest"
+         |dataSources:
+         |  - name: "files"
+         |    connection: {type: "parquet", options: {path: "$out"}}
+         |    steps:
+         |      - name: "accounts"
+         |        count: {records: 20}
+         |        fields:
+         |          - {name: "account_id", options: {regex: "ACC[0-9]{6}"}}
+         |          - {name: "balance", type: "double", options: {min: 0, max: 100}}
+         |        validations:
+         |          - expr: "balance >= 0"
+         |      - name: "payments"
+         |        count: {records: 5}
+         |        fields:
+         |          - {name: "payment_id", options: {regex: "PAY[0-9]{6}"}}
+         |          - {name: "account_id"}
+         |foreignKeys:
+         |  - source: {dataSource: "files", step: "accounts", fields: ["account_id"], cardinality: {ratio: 3}}
+         |    generate:
+         |      - {dataSource: "files", step: "payments", fields: ["account_id"]}
+         |""".stripMargin
+    val srv = new RestServer(spark).start()
+    try {
+      val p = srv.boundPort
+      assert(send(p, "PUT", "/plans/u", unified).statusCode() == 200)
+      val run = send(p, "POST", "/plans/u/run")
+      assert(run.statusCode() == 200, run.body())
+      assert(run.body().contains(""""accounts":20""") && run.body().contains(""""payments":60"""))
+      assert(run.body().contains(""""success":true"""), run.body())
+      assert(spark.read.parquet(s"$out/payments").count() == 60)
+      val preview = post(p, "/preview", unified)
+      assert(preview.statusCode() == 200, preview.body())
+      assert(preview.body().contains(""""dataset":"accounts"""") &&
+        preview.body().contains(""""dataset":"payments""""), preview.body())
+      assert(preview.body().split("payment_id").length - 1 <= 10) // clamped, no ratio
+    } finally srv.stop()
+  }
+
   test("repeated saves overwrite whole documents; concurrent PUT/run never tear") {
     val in = Files.createTempDirectory("graft_conc_in").toString
     spark.range(10).selectExpr("id", "'some long enough text' as text")
@@ -248,8 +291,7 @@ class RestServerSpec extends SparkSuite {
 
     // all-kinds + sink: parses, generates 25 rows, writes the json sink;
     // the blank-name row is skipped, sql sees its oneOf sibling
-    val o = graft.plan.MultiPlanRunner.run(spark,
-      graft.plan.MultiPlanRunner.parseJson(graft.plan.PlanRunner.yamlToJson(y2)))
+    val o = graft.plan.MultiPlanRunner.run(spark, graft.plan.MultiPlanRunner.parseYaml(y2))
     assert(o.counts("t") == 25L)
     val written = spark.read.json(sinkDir)
     assert(written.count() == 25)

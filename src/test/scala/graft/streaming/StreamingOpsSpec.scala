@@ -1,25 +1,26 @@
 package graft.streaming
 
 import graft.SparkSuite
-import graft.pipeline.{QualityFilter, ScoredImage}
+import graft.corpus.ImageRow
+import graft.pipeline.QualityFilter
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.functions._
 
 class StreamingOpsSpec extends SparkSuite {
   import graft.SharedSpark.spark.implicits._
 
-  private def scored(id: String, caption: String, w: Int = 100, h: Int = 100) =
-    ScoredImage(id, Array[Byte](1, 2), w, h, "png", caption, 0L, "en", 0.9, 100.0)
+  private def image(id: String, caption: String, w: Int = 100, h: Int = 100) =
+    ImageRow(id, Array[Byte](1, 2), w, h, "png", caption, 0L)
 
   test("quality rules run unchanged on a stream (stateless projection)") {
     implicit val sqlCtx = spark.sqlContext
-    val mem = MemoryStream[ScoredImage]
-    val annotated = StreamingOps.annotateStream(mem.toDF())
+    val mem = MemoryStream[ImageRow]
+    val annotated = StreamingOps.filterStream(spark, mem.toDF())
     val q = annotated.writeStream.format("memory").queryName("ann").outputMode("append").start()
     mem.addData(
-      scored("a", "a clear photo of a cat on the table"),
-      scored("b", null),
-      scored("c", "ok ok ok ok ok ok ok ok ok ok ok ok"))
+      image("a", "a clear photo of a cat on the table"),
+      image("b", null),
+      image("c", "ok ok ok ok ok ok ok ok ok ok ok ok"))
     q.processAllAvailable()
     val out = spark.table("ann").select("image_id", "drop_reason")
       .as[(String, String)].collect().toMap
@@ -56,15 +57,14 @@ class StreamingOpsSpec extends SparkSuite {
     val out = java.nio.file.Files.createTempDirectory("graft_stream_out").toString
     val ckpt = java.nio.file.Files.createTempDirectory("graft_stream_ckpt").toString
     val mem = MemoryStream[Long]
-    val filtered = StreamingOps.annotateStream(
+    val filtered = StreamingOps.filterStream(spark,
       mem.toDF().selectExpr("value AS phony").select(
         org.apache.spark.sql.functions.concat(lit("id"), col("phony")).as("image_id"),
         lit(Array[Byte](1)).as("bytes"), lit(100).as("w"), lit(100).as("h"),
         lit("png").as("fmt"),
         org.apache.spark.sql.functions.concat(
           lit("a valid caption with plenty of words number "), col("phony")).as("caption"),
-        col("phony").as("phash"), lit("en").as("lang"), lit(0.9).as("lang_conf"),
-        lit(100.0).as("ppl")))
+        col("phony").as("phash")))
     val q1 = StreamingOps.checkpointedParquetSink(filtered, out, ckpt)
     mem.addData(1L to 100L: _*)
     q1.processAllAvailable()
@@ -86,10 +86,9 @@ class StreamingOpsSpec extends SparkSuite {
       .withColumn("image_id", lit("x"))
       .withColumn("bytes", lit(Array[Byte](1))).withColumn("w", lit(100))
       .withColumn("h", lit(100)).withColumn("fmt", lit("png"))
-      .withColumn("phash", lit(0L)).withColumn("lang", lit("en"))
-      .withColumn("lang_conf", lit(0.9)).withColumn("ppl", lit(100.0))
+      .withColumn("phash", lit(0L))
     val counts = StreamingOps.windowedDropCounts(
-      StreamingOps.annotateStream(base), "ts")
+      StreamingOps.filterStream(spark, base), "ts")
     val q = counts.writeStream.format("memory").queryName("wc").outputMode("append").start()
     val t0 = java.sql.Timestamp.valueOf("2026-01-01 00:00:10")
     val t1 = java.sql.Timestamp.valueOf("2026-01-01 00:00:30")
